@@ -571,9 +571,10 @@ def q_hll(spark: SparkSession, sf: str) -> DataFrame:
     doc="EXACT 3-shingle Jaccard pairs >= 0.5 via PREFIX FILTERING "
     "(AllPairs/PPJoin): per-doc shingles ranked rarest-first, self-join "
     "restricted to the first n-ceil(t*n)+1 of each doc plus a length "
-    "filter, then candidate-restricted intersection verify.  Result is "
+    "filter, then each candidate verified by intersecting the two docs' "
+    "sorted shingle sets.  Result is "
     "IDENTICAL to d_ngram_jaccard (same oracle); the plan trades two "
-    "O(shingles) fixed-width shuffles (frequency agg + rank window) for "
+    "O(shingles) fixed-width shuffles (frequency agg + per-doc set) for "
     "a candidate join over Sum pf(h)^2 instead of Sum df(h)^2 — the win "
     "appears on Zipfian real-corpus shingle distributions where the "
     "head shingles dominate the plain join (at this synthetic near-"

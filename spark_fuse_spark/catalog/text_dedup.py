@@ -1067,6 +1067,7 @@ def d_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.dedup import (
         _exploded_shingles,
         _jaccard_prefix_candidates,
+        _shingle_sets,
         minhash_lsh_pairs,
     )
 
@@ -1094,7 +1095,7 @@ def d_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
         verify=False, _exploded=e,
     )  # eagerly checkpointed inside — bands only, no verify join
     union_cands = (
-        _jaccard_prefix_candidates(e, 0.5)
+        _jaccard_prefix_candidates(_shingle_sets(e), 0.5)
         .unionByName(banded)
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)

@@ -91,7 +91,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     prefix_filter: bool = True,
-    _exploded: "DataFrame | None" = None,
 ) -> DataFrame:
     """EXACT Jaccard-over-k-shingles pairs with similarity ≥ threshold.
     Output: (id_a, id_b, jaccard) with id_a < id_b.
@@ -111,8 +110,8 @@ def ngram_jaccard_pairs(
     differential-testing escape hatch.
     """
     if prefix_filter and threshold > 0.0:
-        return jaccard_prefix_pairs(df, text_col, id_col, k, threshold, _exploded=_exploded)
-    e = _exploded if _exploded is not None else _exploded_shingles(df, text_col, id_col, k)
+        return jaccard_prefix_pairs(df, text_col, id_col, k, threshold)
+    e = _exploded_shingles(df, text_col, id_col, k)
     a = e.select(
         F.col("__id").alias("id_a"), F.col("__n").alias("na"), F.col("__h").alias("__h")
     )
@@ -262,7 +261,7 @@ def _containment_prefix_candidates(e: DataFrame, threshold: float) -> DataFrame:
     designated-smaller side's rarest-shingle prefix against the full
     inverted index — join volume Σ_h pf(h)·df(h), exact per the
     prefix argument in :func:`containment_pairs`."""
-    prefix = _rarest_first_prefix(e, threshold)
+    prefix = _prefix_rows(_shingle_sets(e), threshold)
     ps = prefix.select(F.col("__id").alias("__sid"), F.col("__n").alias("__sn"), "__h")
     fl = e.select(F.col("__id").alias("__lid"), F.col("__n").alias("__ln"), "__h")
     return (
@@ -419,9 +418,12 @@ def _verify_candidate_pairs(
     release_candidates: bool = True,
 ) -> DataFrame:
     """Exact-Jaccard verification over the CANDIDATE SET ONLY — the point
-    of candidate generation (LSH bands, prefixes) is to never pay the
-    all-pairs cost.  Restricting the inverted-index join to ids appearing
-    in ``candidates`` keeps this stage O(|candidates|), and the result is
+    of candidate generation (LSH bands) is to never pay the all-pairs
+    cost.  The LSH callers hold no per-document shingle set, and building
+    one (as :func:`jaccard_prefix_pairs` does) would add a shuffle they do
+    not need, so they verify on the exploded frame.  Restricting the
+    inverted-index join to ids appearing in ``candidates`` keeps this
+    stage O(|candidates|), and the result is
     identical to candidates ∩ {exact pairs ≥ threshold} (non-candidate
     pairs are dropped either way; candidate pairs get their true
     Jaccard).
@@ -763,7 +765,6 @@ def jaccard_prefix_pairs(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.8,
-    _exploded: "DataFrame | None" = None,
 ) -> DataFrame:
     """EXACT Jaccard pairs ≥ threshold via prefix filtering (the
     AllPairs/PPJoin family, Bayardo et al. WWW'07 / Xiao et al.
@@ -777,55 +778,79 @@ def jaccard_prefix_pairs(
     first ``n - ceil(t·n) + 1`` (the "prefix"): two docs can reach
     Jaccard ≥ t only if their prefixes intersect, so candidates come
     from a self-join over the RARE end of the frequency spectrum, and
-    a ``t·|A| ≤ |B| ≤ |A|/t`` length filter prunes further before the
-    verify stage counts true intersections (restricted to candidate
-    ids, exactly like the MinHash verify).
+    a ``t·|A| ≤ |B| ≤ |A|/t`` length filter prunes further.
 
-    Extra cost vs the plain join: one global document-frequency
-    aggregate and one per-doc rank window — both O(shingles) shuffles
-    with fixed-width keys; the quadratic join term shrinks from
-    Σ df(h)² to Σ pf(h)² where pf counts only prefix occurrences.
+    Plan: one global document-frequency aggregate, then ONE per-document
+    table ``(__id, __n, __hs)`` (:func:`_shingle_sets`) that serves both
+    stages — the prefix is a ``slice`` of the sorted set, and each
+    candidate pair is verified by joining both documents' sets onto it
+    and counting ``size(array_intersect(ha, hb))``.  The verify is two
+    id-keyed joins over O(candidates) rows; no shingle-level
+    co-occurrence join and no intersection ``groupBy`` exist.  The
+    quadratic join term is Σ pf(h)² where pf counts only prefix
+    occurrences, never the plain index's Σ df(h)².
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")
-    if _exploded is not None:
-        e = _exploded  # caller-owned persisted frame, shared across pipelines
-    else:
-        e = _exploded_shingles(df, text_col, id_col, k).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    candidates = _jaccard_prefix_candidates(e, threshold).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # the exploded frame feeds the frequency aggregate AND the set build
+    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    # the sets feed the prefix self-join and both verify legs
+    sets = _shingle_sets(e).persist(StorageLevel.MEMORY_AND_DISK)
+    a = sets.select(
+        F.col("__id").alias("id_a"), F.col("__n").alias("na"), F.col("__hs").alias("__ha")
     )
-    # verify: true intersection counts over candidate ids only (shared
-    # with the MinHash-LSH path)
-    return _verify_candidate_pairs(e, candidates, threshold, release_e=_exploded is None)
+    b = sets.select(
+        F.col("__id").alias("id_b"), F.col("__n").alias("nb"), F.col("__hs").alias("__hb")
+    )
+    shared = F.size(F.array_intersect("__ha", "__hb"))
+    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+    result = (
+        _jaccard_prefix_candidates(sets, threshold)
+        .join(a, "id_a")
+        .join(b, "id_b")
+        .select("id_a", "id_b", "na", "nb", shared.alias("shared"))
+        .withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+    # materialize (lineage-truncated) so the persisted inputs can be
+    # released eagerly instead of leaking for the session lifetime
+    out = result.localCheckpoint(eager=True)
+    sets.unpersist()
+    e.unpersist()
+    return out
 
 
-def _rarest_first_prefix(e: DataFrame, threshold: float) -> DataFrame:
-    """Each document's rarest ``n - ceil(t·n) + 1`` shingles (ascending
-    global document frequency, hash tie-break for a total deterministic
-    order) — the AllPairs/PPJoin prefix.  Corpus-stopword shingles rank
-    LAST in every document, so they only survive into a prefix when a
-    document consists of almost nothing else."""
-    from pyspark.sql import Window
-
+def _shingle_sets(e: DataFrame) -> DataFrame:
+    """One row per document, ``(__id, __n, __hs)``: its shingle hashes in
+    rarest-first order (ascending global document frequency, hash
+    tie-break for a total deterministic order) — the AllPairs/PPJoin
+    order every prefix is cut from.  Corpus-stopword shingles sort LAST
+    in every document, so they only reach a prefix when a document
+    consists of almost nothing else.  ``__n`` is the set size."""
     freq = e.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("__id").orderBy("__df", "__h")
     return (
         e.join(freq, "__h")
-        .withColumn("__pos", F.row_number().over(w))
-        .where(F.col("__pos") <= F.col("__n") - F.ceil(threshold * F.col("__n")) + 1)
-        .select("__id", "__n", "__h")
+        .groupBy("__id")
+        .agg(F.array_sort(F.collect_list(F.struct("__df", "__h"))).alias("__s"))
+        .select("__id", F.size("__s").alias("__n"), F.col("__s.__h").alias("__hs"))
     )
 
 
-def _jaccard_prefix_candidates(e: DataFrame, threshold: float) -> DataFrame:
+def _prefix_rows(sets: DataFrame, threshold: float) -> DataFrame:
+    """``(__id, __n, __h)`` for each document's rarest
+    ``n - ceil(t·n) + 1`` shingles, read off :func:`_shingle_sets`."""
+    plen = (F.col("__n") - F.ceil(threshold * F.col("__n")) + 1).cast("int")
+    return sets.select("__id", "__n", F.explode(F.slice("__hs", 1, plen)).alias("__h"))
+
+
+def _jaccard_prefix_candidates(sets: DataFrame, threshold: float) -> DataFrame:
     """Candidate (id_a, id_b) pairs whose prefixes intersect and whose
     sizes satisfy the Jaccard length filter — a superset of all pairs
     with Jaccard ≥ threshold, with join volume Σ_h pf(h)² (prefix
-    occurrences only), never the plain index's Σ_h df(h)²."""
-    prefix = _rarest_first_prefix(e, threshold)
+    occurrences only), never the plain index's Σ_h df(h)².  ``sets`` is
+    the :func:`_shingle_sets` table."""
+    prefix = _prefix_rows(sets, threshold)
     pa = prefix.select(
         F.col("__id").alias("id_a"), F.col("__n").alias("na"), "__h"
     )

@@ -11,8 +11,9 @@ shuffle-bounded way to do this on a massive edge list:
 * every round is two hash-shuffles on node id (``groupBy`` — no
   driver-side graph, no ``collect``);
 * the edge set contracts monotonically toward star graphs rooted at
-  each component's minimum id, converging in O(log n) rounds (2–3 in
-  practice for dedup graphs, whose components are small and dense);
+  each component's minimum id, converging in O(log n) rounds (one in
+  practice for dedup graphs, whose components are small and dense —
+  the loop stops as soon as the edges form a star forest);
 * each round is ``localCheckpoint``-ed so the loop does not build an
   unbounded lineage / replay chain.
 
@@ -61,7 +62,14 @@ def _round_checkpoint(df: DataFrame, checkpoint_dir: "str | None", eager: bool =
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
+    # setCheckpointDir makes a fresh ``<dir>/<uuid>`` subdirectory on every
+    # call, so only switch when the current one is not under checkpoint_dir
+    # (compared in the Hadoop-qualified form getCheckpointDir reports)
+    path = sc._jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+    want = path.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(path).toString()
+    current = sc.getCheckpointDir()
+    if current is None or current.rsplit("/", 1)[0] != want:
+        sc.setCheckpointDir(checkpoint_dir)
     return df.checkpoint(eager=eager)
 
 
@@ -128,7 +136,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 20,
-    eager_rounds: bool = False,
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Component labels for every node appearing in ``pairs``.
@@ -141,17 +148,23 @@ def connected_components(
     ``groupBy("u")`` shuffles over the current edge list; no step ever
     materializes a neighborhood larger than the true neighborhood, and
     the edge count shrinks toward one edge per non-root node.
-    Convergence is detected by edge-set fixpoint (``exceptAll`` on a
-    checkpointed, deduped edge list — cheap because late-round edge
-    lists are already near-stars).
+
+    Convergence: the loop stops as soon as the round's directed
+    (``u > v``) edges form a STAR FOREST — no node has two out-edges and
+    no out-edge's target has an out-edge of its own.  One ``groupBy`` on
+    node over the new edges alone decides it; the previous round's edge
+    list is never read again.  A star forest is a fixpoint of large-star
+    plus small-star: every leaf's only neighbour is its root, which is
+    smaller than every leaf, so large-star re-emits each (leaf, root)
+    edge and small-star maps each leaf to the same root.  The labels are
+    therefore the ones a further round would produce, and the
+    confirmation round an edge-set diff needs is skipped — dedup graphs
+    (small, dense components) become stars in round 1.
     """
     # normalize high→low at entry so the per-round boundary invariant is
     # "directed (u > v), deduped" from round 0: _symmetrize regenerates
-    # both directions anyway (the symmetric graph is identical), and the
-    # convergence diff below can then read the old edge list AS-IS
-    # instead of re-normalizing + re-deduping it every round (one fewer
-    # exchange per round; _small_star's output satisfies the same
-    # invariant by construction)
+    # both directions anyway, so the symmetric graph is identical.  LAZY
+    # checkpoint: round 1's action computes it.
     a = F.col(id_a).cast("long")
     b = F.col(id_b).cast("long")
     edges = _round_checkpoint(
@@ -159,38 +172,31 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct(),
         checkpoint_dir,
+        eager=False,
     )
     converged = False
     for _ in range(max_iterations):
-        ls = _large_star(_symmetrize(edges))
-        # LAZY checkpoint: the convergence count below is this round's
-        # only action and it consumes ``new_edges`` (the +1 side of the
-        # diff), so that one job computes the star rounds, stores the
-        # checkpoint blocks, and decides the fixpoint — one
-        # driver-blocking job per round instead of two
-        # (eager-materialize + diff; measured 6.0 s for 6 rounds over
-        # 823 edges at sf0.1, i.e. pure per-job overhead).  Next round's
-        # consumers then read the already-materialized checkpoint.
-        # ``eager_rounds=True`` restores the old two-job cadence (A/B
-        # instrument; results identical either way).
-        new_edges = _round_checkpoint(_small_star(ls), checkpoint_dir, eager=eager_rounds)
-        # fixpoint when the directed edge sets match.  Both sides satisfy
-        # the boundary invariant (directed u > v, deduped) — the old side
-        # by entry normalization, the new by _small_star's construction —
-        # so tag each side ±1 and group: any (u, v) whose tag sum is
-        # nonzero is in exactly one side — ONE job decides set equality
-        # (the old count+exceptAll formulation cost 2–3 driver jobs per
-        # round, which dominates late rounds whose edge lists are already
-        # near-stars)
-        diff = (
-            new_edges.select("u", "v", F.lit(1).alias("__side"))
-            .unionByName(edges.select("u", "v", F.lit(-1).alias("__side")))
-            .groupBy("u", "v")
-            .agg(F.sum("__side").alias("__d"))
-            .where(F.col("__d") != 0)
+        # LAZY checkpoint: the star test below is the round's only action
+        # and it reads ``edges``, so one job computes the star rounds,
+        # stores the checkpoint blocks and decides convergence
+        edges = _round_checkpoint(
+            _small_star(_large_star(_symmetrize(edges))), checkpoint_dir, eager=False
         )
-        converged = diff.limit(1).count() == 0
-        edges = new_edges
+        ends = edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("u").alias("node"), F.lit(1).alias("out")),
+                    F.struct(F.col("v").alias("node"), F.lit(0).alias("out")),
+                )
+            ).alias("e")
+        ).select("e.node", "e.out")
+        # star forest iff every node with an out-edge is a leaf (degree one)
+        not_star = (
+            ends.groupBy("node")
+            .agg(F.max("out").alias("__tail"), F.count(F.lit(1)).alias("__deg"))
+            .where((F.col("__tail") == 1) & (F.col("__deg") > 1))
+        )
+        converged = not_star.limit(1).count() == 0
         if converged:
             break
     if not converged:
@@ -716,6 +722,10 @@ def pagerank_exact(
         ).alias("nd0"),
     ).first()
     n = int(sizes["n"])
+    if n == 0:  # no edges: no nodes to score
+        e.unpersist()
+        nd.unpersist()
+        return nd.select("node", "deg", F.lit(int(scale)).cast("long").alias("score_micro"))
     dang = int(sizes["nd0"]) * int(scale)
 
     dang_agg = F.coalesce(

@@ -107,3 +107,37 @@ def test_pagerank_exact_rejects_zero_iterations(spark, small_graph):
     _, df = small_graph
     with pytest.raises(ValueError):
         pagerank_exact(df, iterations=0)
+
+
+def test_pagerank_exact_empty_edges_returns_empty_frame(spark):
+    from spark_fuse_spark.operators.graph import pagerank_exact
+
+    df = spark.createDataFrame([], "src long, dst long")
+    out = pagerank_exact(df, iterations=3)
+    assert out.columns == ["node", "deg", "score_micro"]
+    assert out.count() == 0
+
+
+def test_reliable_checkpoint_dir_matches_default(spark, small_graph, tmp_path):
+    """``checkpoint_dir=`` switches every round to a reliable checkpoint;
+    results must equal the localCheckpoint default exactly, and the
+    session's checkpoint directory is set once, not once per round."""
+    from spark_fuse_spark.operators.graph import connected_components, hits, pagerank_exact
+
+    _, df = small_graph
+    pairs = df.select(df.src.alias("id_a"), df.dst.alias("id_b"))
+    ckpt = str(tmp_path / "ckpt")
+
+    def run(checkpoint_dir):
+        cc = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+        pr = pagerank_exact(df, iterations=4, checkpoint_dir=checkpoint_dir)
+        hubs, auths = hits(df, iterations=3, checkpoint_dir=checkpoint_dir)
+        return [sorted(map(tuple, f.collect())) for f in (cc, pr, hubs, auths)]
+
+    default = run(None)
+    assert run(ckpt) == default
+    sc = spark.sparkContext
+    current = sc.getCheckpointDir()
+    assert current is not None and "/ckpt/" in current
+    assert run(ckpt) == default
+    assert sc.getCheckpointDir() == current

@@ -270,7 +270,7 @@ def _union_find_components(edges):
 
 
 def test_cc_matches_union_find_on_random_graphs(spark):
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 
     from spark_fuse_spark.operators.graph import connected_components
@@ -288,6 +288,14 @@ def test_cc_matches_union_find_on_random_graphs(spark):
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
     @given(edges=edges_strategy)
+    # disjoint cliques: the dedup shape (small, dense components)
+    @example(
+        edges=[(a, b) for c in (0, 10, 20) for a in range(c, c + 4) for b in range(a + 1, c + 4)]
+    )
+    # already a star forest rooted at each component's minimum
+    @example(edges=[(2, 1), (3, 1), (4, 1), (11, 10), (12, 10)])
+    # a star whose centre is not its minimum
+    @example(edges=[(5, 1), (5, 2), (5, 3)])
     def run(edges):
         expected = _union_find_components(edges)
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")

@@ -72,7 +72,7 @@ CONTRACTS = {
     # "no cartesian" for all of them
     "d_dedup_exact": PlanExpectation(require_partial_agg=True, max_exchanges=2),
     # exact jaccard now rides the prefix filter (hot-shingle guard): the
-    # freq/rank/candidate/verify stages are lineage-truncated by the eager
+    # freq/set/candidate/verify stages are lineage-truncated by the eager
     # localCheckpoint (shape pinned by the identity test vs the plain
     # inverted index + the hot-shingle candidate contract); the final plan
     # may only sort the checkpointed pairs
@@ -117,7 +117,7 @@ CONTRACTS = {
     "t_pii_redact": PlanExpectation(max_exchanges=1),
     "t_chunk_documents": PlanExpectation(max_exchanges=1),
     "t_repetition": PlanExpectation(require_partial_agg=True, max_exchanges=3),
-    # prefix-filtered exact jaccard: the freq/rank/candidate/verify stages
+    # prefix-filtered exact jaccard: the freq/set/candidate/verify stages
     # are lineage-truncated by the eager localCheckpoint (their shape is
     # pinned by the identity test vs the plain inverted index); the final
     # plan may only sort the checkpointed pairs
@@ -483,6 +483,27 @@ def test_plan_contract(spark, sf_small, name):
     df = load_all()[name].spark(spark, sf_small)
     problems = check_plan(df, CONTRACTS[name])
     assert not problems, f"{name}:\n" + "\n".join(problems) + "\n\n" + physical_plan(df)
+
+
+# query name -> max Spark jobs to build the DataFrame and collect it on the
+# test tier, AQE query-stage jobs included.  At small scale a job's fixed
+# cost outweighs its data work, so these budgets are performance contracts.
+JOB_BUDGETS = {
+    "d_dedup_clusters": 31,
+}
+
+
+@pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
+def test_job_budget(spark, sf_small, name):
+    sc = spark.sparkContext
+    group = f"job-budget:{name}"
+    sc.setJobGroup(group, group)
+    try:
+        load_all()[name].spark(spark, sf_small).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= JOB_BUDGETS[name], f"{name}: {jobs} jobs > budget {JOB_BUDGETS[name]}"
 
 
 def test_scan_summaries_parse(spark, sf_small):
@@ -987,6 +1008,7 @@ def test_prefix_guard_kills_hot_shingle_candidates(spark):
         _containment_prefix_candidates,
         _exploded_shingles,
         _jaccard_prefix_candidates,
+        _shingle_sets,
         containment_pairs,
         ngram_jaccard_pairs,
     )
@@ -1001,7 +1023,7 @@ def test_prefix_guard_kills_hot_shingle_candidates(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     e = _exploded_shingles(docs, "text", "doc_id", 3)
 
-    jac_cand = _jaccard_prefix_candidates(e, 0.5).count()
+    jac_cand = _jaccard_prefix_candidates(_shingle_sets(e), 0.5).count()
     con_cand = _containment_prefix_candidates(e, 0.9).count()
     # O(docs × prefix), not O(df²): the hot shingle contributes nothing
     assert jac_cand < 50, f"jaccard candidates exploded: {jac_cand}"

@@ -58,9 +58,9 @@ def main() -> None:
     captured: list[DataFrame] = []
     real_ckpt = _CDF.localCheckpoint
 
-    def spy(self: DataFrame, eager: bool = True) -> DataFrame:
+    def spy(self: DataFrame, *args, **kwargs) -> DataFrame:
         captured.append(self)
-        return real_ckpt(self, eager=eager)
+        return real_ckpt(self, *args, **kwargs)
 
     _CDF.localCheckpoint = spy  # type: ignore[method-assign]
     try:

@@ -38,12 +38,16 @@ delete sidecar at the CURRENT segment count and then appends the new
 segment — the sidecar kills old copies of the keys but not the rows it
 just wrote.
 
-Scale shape: ``mor_read`` anti-joins each segment against the union of
-its applicable delete keys; sidecars are tiny next to the base, so
-Spark broadcasts them and each segment costs one scan with zero base
-shuffle.  Segment count is bounded by compaction cadence (every
-read-side union member is one plan branch — compact when the manifest
-grows past tens of segments, exactly like any MOR table service).
+Scale shape: ``mor_read`` reads every applicable sidecar in ONE scan,
+tagging each key with the sequence in its sidecar's directory name, and
+anti-joins each segment against the keys whose sequence exceeds the
+segment's index.  Sidecars are tiny next to the base, so Spark
+broadcasts them and each segment costs one scan with zero base shuffle;
+duplicate keys across sidecars need no ``distinct``, because an anti-join
+does not depend on them.  Segment count is bounded by compaction cadence
+(every read-side union member is one plan branch — compact when the
+manifest grows past tens of segments, exactly like any MOR table
+service).
 """
 
 from __future__ import annotations
@@ -200,14 +204,23 @@ def mor_read(spark: SparkSession, target: str, key_cols: "list[str]") -> DataFra
     segs = _segments(target)
     if not segs:
         raise FileNotFoundError(f"no data segments under {target}")
-    dels = _delete_files(target)
+    # one read of every sidecar that applies to some segment; each key
+    # carries its sidecar's sequence, parsed from the d-<seq>-<uuid>
+    # directory in its file path
+    dels = [(s, p) for s, p in _delete_files(target) if s > 0]
+    if dels:
+        keys = spark.read.parquet(*[p for _, p in dels]).select(
+            *key_cols,
+            F.regexp_extract("_metadata.file_path", r"/d-(\d+)-[^/]*/[^/]*$", 1)
+            .cast("int")
+            .alias("__seq"),
+        )
     parts = []
     for i, seg in enumerate(segs):
         base = spark.read.parquet(seg)
-        applicable = [p for s, p in dels if s > i]
-        if applicable:
-            keys = spark.read.parquet(*applicable).select(*key_cols).distinct()
-            base = base.join(F.broadcast(keys), key_cols, "left_anti")
+        if any(s > i for s, _ in dels):
+            applicable = keys.where(F.col("__seq") > i).drop("__seq")
+            base = base.join(F.broadcast(applicable), key_cols, "left_anti")
         parts.append(base)
     out = parts[0]
     for p in parts[1:]:

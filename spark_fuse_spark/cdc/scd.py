@@ -19,14 +19,19 @@ Semantics preserved from the reference
 
 Scale notes (100 TB design):
 
-* every comparison is a key-equi join → shuffles on business keys; AQE
-  skew-join handles hot keys, and the Delta backend prunes untouched
-  files.  The parquet fallback rewrites the table (see ``store.py``).
+* SCD1 compares by key-equi joins → shuffles on business keys; AQE
+  skew-join handles hot keys.
+* an SCD2 mini-batch on the parquet backend rewrites the whole table
+  anyway (see ``store.py``), so it is resolved in ONE window keyed on
+  the business keys over history ∪ batch: one shuffle of the table, no
+  joins.  The Delta backend stays a file-pruned ``MERGE`` that touches
+  only files holding matched keys.
 * the SCD2 per-sequence loop is driver-side but bounded by the maximum
   duplicate multiplicity of one batch (max_seq), not by data volume —
   same bound as the reference.
 * the multi-pass source is cached once per call (reference
-  ``:627-629,664-665``).
+  ``:627-629,664-665``); one aggregate over it reads both the loop bound
+  and the null-key check.
 """
 
 from __future__ import annotations
@@ -58,6 +63,7 @@ END_COL = "effective_end_ts"
 CURRENT_COL = "is_current"
 VERSION_COL = "version"
 _SEQ_COL = "__change_tracking_seq"
+_BATCH_COL = "__change_tracking_batch"
 
 _SCD1_META = (HASH_COL, LOAD_TS_COL)
 _SCD2_META = (HASH_COL, START_COL, END_COL, CURRENT_COL, VERSION_COL)
@@ -314,26 +320,37 @@ def track_history_upsert(
     """
     store = store or get_store()
     _validate_keys(source, business_keys)
-    src = _apply_null_key_policy(source, business_keys, null_key_policy)
 
+    # Null keys form their own dedup/sequence groups, so the null-key
+    # policy can run on the sequenced rows: one aggregate over the cached
+    # source reads the loop bound and the null-key check together.
     if order_by is None:
-        src = _dedup_keep_latest(src, business_keys, None).withColumn(_SEQ_COL, F.lit(1))
+        src = _dedup_keep_latest(source, business_keys, None).withColumn(_SEQ_COL, F.lit(1))
     else:
         w = Window.partitionBy(*business_keys).orderBy(F.col(order_by).asc_nulls_first())
-        src = src.withColumn(_SEQ_COL, F.row_number().over(w))
+        src = source.withColumn(_SEQ_COL, F.row_number().over(w))
 
     tracked = _hash_columns(src, business_keys, exclude_columns)
-    src = src.withColumn(HASH_COL, row_hash(tracked)).withColumn(
+    cached = src.withColumn(HASH_COL, row_hash(tracked)).withColumn(
         LOAD_TS_COL, _load_ts(load_ts_expr)
-    )
-    src = src.cache()  # multi-pass: max(seq) + one pass per sequence rank
+    ).cache()  # multi-pass: the aggregate + one pass per sequence rank
     try:
-        max_seq = src.agg(F.max(_SEQ_COL)).collect()[0][0] or 0
-        for seq in range(1, max_seq + 1):
+        null_key = _null_key_predicate(business_keys)
+        max_seq, max_seq_keyed, has_null = cached.agg(
+            F.max(_SEQ_COL), F.max(F.when(~null_key, F.col(_SEQ_COL))), F.max(null_key)
+        ).first()
+        src = cached
+        if has_null and null_key_policy != "allow":
+            if null_key_policy == "error":
+                raise ValueError(f"null business key values present in {business_keys}")
+            if null_key_policy != "drop":
+                raise ValueError(f"unknown null-key policy {null_key_policy!r}")
+            src, max_seq = cached.where(~null_key), max_seq_keyed
+        for seq in range(1, (max_seq or 0) + 1):
             batch = src.where(F.col(_SEQ_COL) == seq).drop(_SEQ_COL)
             _apply_scd2_batch(spark, batch, target, business_keys, store)
     finally:
-        src.unpersist()
+        cached.unpersist()
 
 
 def _apply_scd2_batch(
@@ -353,55 +370,50 @@ def _apply_scd2_batch(
     if _delta_scd2_batch(spark, batch, target, business_keys, store, out_cols):
         return
 
+    # One keyed shuffle: the full history and the mini-batch (stamped and
+    # projected to the target's columns, so a batch lacking a target
+    # column fails before anything is written) share a window per
+    # business key.  partitionBy groups null keys together, the same
+    # grouping as <=>.
     tgt = store.read(spark, target)
-    b = batch.alias("b")
-    c = (
-        tgt.where(F.col(CURRENT_COL))
-        .select(*business_keys, F.col(HASH_COL).alias("__c_hash"))
-        .alias("c")
+    is_new = F.col(_BATCH_COL)
+    both = tgt.withColumn(_BATCH_COL, F.lit(False)).unionByName(
+        _stamp_insert(batch, F.lit(0)).select(tgt.columns).withColumn(_BATCH_COL, F.lit(True))
     )
-    cmp = b.join(c, _nullsafe_cond(b, c, business_keys), "left")
-
-    # rows to version-up: brand new key, or current hash differs
-    to_insert = cmp.where(
-        F.col("__c_hash").isNull() | (F.col("__c_hash") != b[HASH_COL])
-    ).select([b[x] for x in batch.columns])
-
+    w = Window.partitionBy(*business_keys)
+    cur_hash = F.max(F.when(~is_new & F.col(CURRENT_COL), F.col(HASH_COL))).over(w)
+    new_hash = F.max(F.when(is_new, F.col(HASH_COL))).over(w)
+    # The close timestamp is the BATCH's materialized load_ts (carried
+    # from the cached source rows), not a freshly evaluated expression:
+    # with the default current_timestamp() a re-evaluation would land
+    # after the successor's effective_start, leaving overlapping validity
+    # intervals — end_ts of the old version must equal start_ts of the
+    # new one (the Delta path uses s.load_ts the same way).
+    close_ts = F.max(F.when(is_new, F.col(LOAD_TS_COL))).over(w)
     # prior max version per key over the FULL history (reference J2/A1,
     # change_tracking.py:348-354)
-    max_ver = tgt.groupBy(*business_keys).agg(F.max(VERSION_COL).alias("__max_ver"))
-    i, m = to_insert.alias("i"), max_ver.alias("m")
-    versioned = i.join(m, _nullsafe_cond(i, m, business_keys), "left").select(
-        [i[x] for x in batch.columns]
-        + [(F.coalesce(F.col("__max_ver"), F.lit(0)) + F.lit(1)).alias(VERSION_COL)]
+    max_ver = F.max(F.when(~is_new, F.col(VERSION_COL))).over(w)
+    keyed = both.select(
+        "*",
+        cur_hash.alias("__cur_hash"),
+        new_hash.alias("__new_hash"),
+        close_ts.alias("__close_ts"),
+        max_ver.alias("__max_ver"),
     )
-    inserts = _stamp_insert(versioned, F.col(VERSION_COL))
-
-    # keys being closed: matched AND hash changed (new-key inserts close
-    # nothing).  The close timestamp is the BATCH's materialized load_ts
-    # (carried from the cached source rows), not a freshly evaluated
-    # expression: with the default current_timestamp() a re-evaluation
-    # would land after the successor's effective_start, leaving
-    # overlapping validity intervals — end_ts of the old version must
-    # equal start_ts of the new one (the Delta path already uses
-    # s.load_ts; this keeps both backends consistent).
-    changed_keys = cmp.where(
-        F.col("__c_hash").isNotNull() & (F.col("__c_hash") != b[HASH_COL])
-    ).select([b[k] for k in business_keys] + [b[LOAD_TS_COL].alias("__close_ts")])
-    cur, k2 = tgt.where(F.col(CURRENT_COL)).alias("t2"), changed_keys.alias("k2")
-    closing = (
-        cur.join(k2, _nullsafe_cond(cur, k2, business_keys), "inner")
-        .select([cur[x] for x in tgt.columns] + [k2["__close_ts"]])
-        .withColumn(END_COL, F.col("__close_ts"))
-        .withColumn(CURRENT_COL, F.lit(False))
-        .drop("__close_ts")
+    # a current row is closed when the batch brings a different hash;
+    # a batch row versions up when its key is new or its hash changed
+    closing = ~is_new & F.col(CURRENT_COL) & (F.col("__cur_hash") != F.col("__new_hash"))
+    inserting = is_new & (
+        F.col("__cur_hash").isNull() | (F.col("__cur_hash") != F.col(HASH_COL))
     )
-    surviving_current = cur.join(k2, _nullsafe_cond(cur, k2, business_keys), "left_anti")
-    result = (
-        tgt.where(~F.col(CURRENT_COL))
-        .unionByName(surviving_current)
-        .unionByName(closing)
-        .unionByName(inserts.select(tgt.columns))
+    version = (F.coalesce(F.col("__max_ver"), F.lit(0)) + F.lit(1)).cast("int")
+    adjusted = {
+        END_COL: F.when(closing, F.col("__close_ts")).otherwise(F.col(END_COL)),
+        CURRENT_COL: F.when(closing, F.lit(False)).otherwise(F.col(CURRENT_COL)),
+        VERSION_COL: F.when(is_new, version).otherwise(F.col(VERSION_COL)),
+    }
+    result = keyed.where(~is_new | inserting).select(
+        [adjusted[c].alias(c) if c in adjusted else F.col(c) for c in tgt.columns]
     )
     store.overwrite(result, target)
 

@@ -336,6 +336,10 @@ def pagerank(
         "node", F.coalesce("__deg", F.lit(0)).alias("__deg")
     ).persist()
     n = nd.count()  # one job; also materializes the persisted edge set
+    if n == 0:  # no edges: no nodes to score
+        e.unpersist()
+        nd.unpersist()
+        return nd.select("node", F.lit(0.0).alias("rank"))
     state = nd.withColumn("rank", F.lit(1.0 / n))
 
     dm_agg = F.coalesce(

@@ -131,6 +131,70 @@ def test_scd2_new_key_does_not_close_others(spark, tmp_path):
     assert rows[1]["is_current"] is True and rows[2]["is_current"] is True
 
 
+def test_scd2_null_key_error_leaves_target_unchanged(spark, tmp_path):
+    target = str(tmp_path / "h4")
+    track_history_upsert(
+        spark, _rows(spark, [(1, "ann", "berlin")]), target, ["id"], load_ts_expr=TS1
+    )
+    before = sorted(map(tuple, spark.read.parquet(target).collect()))
+    bad = _rows(spark, [(None, "x", "y"), (1, "ann", "madrid")])
+    with pytest.raises(ValueError, match="null business key"):
+        track_history_upsert(spark, bad, target, ["id"], load_ts_expr=TS2)
+    assert sorted(map(tuple, spark.read.parquet(target).collect())) == before
+
+
+def test_scd2_null_key_drop_writes_no_null_key_row(spark, tmp_path):
+    target = str(tmp_path / "h5")
+    df = _rows(spark, [(None, "x", "y"), (1, "ann", "berlin"), (2, "bob", "paris")])
+    track_history_upsert(
+        spark, df, target, ["id"], null_key_policy="drop", load_ts_expr=TS1
+    )
+    rows = spark.read.parquet(target).collect()
+    assert sorted(r["id"] for r in rows) == [1, 2]
+    assert all(r["version"] == 1 and r["is_current"] for r in rows)
+
+
+def test_scd2_null_key_drop_multiplicity_adds_no_versions(spark, tmp_path, monkeypatch):
+    """Dropped null-key rows do not set the sequence loop's bound: a null
+    key repeated five times runs one mini-batch, not five."""
+    from spark_fuse_spark.cdc import scd
+
+    calls = []
+    real = scd._apply_scd2_batch
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(scd, "_apply_scd2_batch", counting)
+    target = str(tmp_path / "h6")
+    df = spark.createDataFrame(
+        [(None, "x", "y", s) for s in range(5)] + [(1, "ann", "berlin", 0)],
+        ["id", "name", "city", "seq"],
+    )
+    track_history_upsert(
+        spark, df, target, ["id"], order_by="seq", null_key_policy="drop",
+        load_ts_expr=TS1,
+    )
+    assert len(calls) == 1
+    rows = spark.read.parquet(target).collect()
+    assert [(r["id"], r["version"], r["is_current"]) for r in rows] == [(1, 1, True)]
+
+
+def test_scd2_unknown_null_key_policy_raises_only_on_null_keys(spark, tmp_path):
+    target = str(tmp_path / "h7")
+    track_history_upsert(
+        spark, _rows(spark, [(1, "ann", "berlin")]), target, ["id"],
+        null_key_policy="bogus", load_ts_expr=TS1,
+    )
+    assert len(spark.read.parquet(target).collect()) == 1
+    with pytest.raises(ValueError, match="unknown null-key policy"):
+        track_history_upsert(
+            spark, _rows(spark, [(None, "x", "y"), (2, "bob", "paris")]), target, ["id"],
+            null_key_policy="bogus", load_ts_expr=TS2,
+        )
+
+
 # ------------------------------------------------------- dispatch / builder
 
 

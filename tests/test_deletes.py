@@ -185,3 +185,27 @@ def test_overwrite_clears_legacy_sibling_sidecars(spark, tmp_path):
     mor_write(_base(spark), t)  # overwrite: the whole old table is dead
     assert not os.path.isdir(legacy)
     assert mor_read(spark, t, ["k"]).count() == 100  # nothing resurfaces/deletes
+
+
+def test_key_deleted_twice_then_by_upsert(spark, tmp_path):
+    """Duplicate keys across sidecars (two deletes, then an upsert's
+    sidecar) subtract each base row once and leave the upserted copy."""
+    t = str(tmp_path / "t")
+    mor_write(_base(spark), t)
+    mor_delete(_base(spark).where("k < 10").select("k"), t, ["k"])
+    mor_delete(_base(spark).where("k < 10").select("k"), t, ["k"])
+    assert mor_read(spark, t, ["k"]).count() == 90
+    mor_upsert(spark.range(3, 5).select(F.col("id").alias("k"), F.lit(500).alias("v")), t, ["k"])
+    got = sorted((r["k"], r["v"]) for r in mor_read(spark, t, ["k"]).collect())
+    assert got == [(3, 500), (4, 500)] + [(k, k % 7) for k in range(10, 100)]
+    assert mor_compact(spark, t, ["k"]) == 3
+    assert sorted((r["k"], r["v"]) for r in mor_read(spark, t, ["k"]).collect()) == got
+
+
+def test_long_key_sidecar_applies_to_int_key_segment(spark, tmp_path):
+    t = str(tmp_path / "t")
+    mor_write(_base(spark).select(F.col("k").cast("int").alias("k"), "v"), t)
+    mor_delete(spark.range(0, 5).select(F.col("id").alias("k")), t, ["k"])  # long keys
+    live = mor_read(spark, t, ["k"])
+    assert dict(live.dtypes)["k"] == "int"
+    assert sorted(r["k"] for r in live.collect()) == list(range(5, 100))

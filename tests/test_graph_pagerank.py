@@ -118,6 +118,14 @@ def test_pagerank_exact_empty_edges_returns_empty_frame(spark):
     assert out.count() == 0
 
 
+def test_pagerank_empty_edges_returns_empty_frame(spark):
+    df = spark.createDataFrame([], "src long, dst long")
+    out = pagerank(df, iterations=3)
+    assert out.columns == ["node", "rank"]
+    assert dict(out.dtypes)["rank"] == "double"
+    assert out.count() == 0
+
+
 def test_reliable_checkpoint_dir_matches_default(spark, small_graph, tmp_path):
     """``checkpoint_dir=`` switches every round to a reliable checkpoint;
     results must equal the localCheckpoint default exactly, and the

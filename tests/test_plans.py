@@ -11,6 +11,8 @@ upper bounds elsewhere).  Nothing here executes a job: all assertions read
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -489,6 +491,9 @@ def test_plan_contract(spark, sf_small, name):
 # test tier, AQE query-stage jobs included.  At small scale a job's fixed
 # cost outweighs its data work, so these budgets are performance contracts.
 JOB_BUDGETS = {
+    "c_mor_upsert_read": 13,
+    "c_scd2_point_in_time": 21,
+    "c_scd2_temporal_join": 23,
     "d_dedup_clusters": 31,
 }
 
@@ -504,6 +509,46 @@ def test_job_budget(spark, sf_small, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= JOB_BUDGETS[name], f"{name}: {jobs} jobs > budget {JOB_BUDGETS[name]}"
+
+
+def test_scd2_batch_is_one_keyed_window(spark):
+    """A parquet-backend SCD2 mini-batch rewrites the table from ONE
+    window over history ∪ batch, keyed on the business keys — no join."""
+    import datetime
+
+    from spark_fuse_spark.cdc.scd import _apply_scd2_batch
+    from spark_fuse_spark.cdc.store import TableStore
+
+    ts1, ts2 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
+    tgt = spark.createDataFrame(
+        [(1, "berlin", "h1", ts1, ts1, None, True, 1)],
+        "id long, city string, row_hash string, load_ts timestamp,"
+        " effective_start_ts timestamp, effective_end_ts timestamp,"
+        " is_current boolean, version int",
+    )
+    batch = spark.createDataFrame(
+        [(1, "madrid", "h2", ts2), (2, "oslo", "h3", ts2)],
+        "id long, city string, row_hash string, load_ts timestamp",
+    )
+    written = []
+
+    class CapturingStore(TableStore):
+        def exists(self, spark, target):
+            return True
+
+        def read(self, spark, target):
+            return tgt
+
+        def overwrite(self, df, target):
+            written.append(df)
+
+    _apply_scd2_batch(spark, batch, "/t", ["id"], CapturingStore())
+    (df,) = written
+    plan = physical_plan(df)
+    assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1, plan
+    assert join_strategies(df) == {}, plan
+    rows = sorted((r["id"], r["city"], r["version"], r["is_current"]) for r in df.collect())
+    assert rows == [(1, "berlin", 1, False), (1, "madrid", 2, True), (2, "oslo", 1, True)]
 
 
 def test_scan_summaries_parse(spark, sf_small):

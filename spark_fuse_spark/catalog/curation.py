@@ -1046,8 +1046,8 @@ def t_dsir(spark: SparkSession, sf: str) -> DataFrame:
     "The iterative-Spark discipline showcase (operators/graph.pagerank): "
     "per round exactly two partial-agg'd shuffles (rank join on src, "
     "contribution groupBy on dst), edge list persisted once, dangling "
-    "mass folded back via a 1-row broadcast panel in the SAME plan (no "
-    "per-iteration driver action), and eager localCheckpoint every 3 "
+    "mass read as an observe() metric of the round's checkpoint job (no "
+    "separate scalar job), and an eager localCheckpoint in each of the "
     "rounds so lineage stays bounded.  Rows-only driver check; the "
     "numerics are pinned against a numpy power iteration in "
     "tests/test_graph_pagerank.py.",

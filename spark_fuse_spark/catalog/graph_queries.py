@@ -1002,13 +1002,14 @@ ORDER BY role, score_micro DESC, node
     "buyers concentrate on, hub = customers whose purchases point at "
     "authoritative suppliers (operators/graph.hits).  Unlike the "
     "rows-only pagerank, this iterative query is FULLY oracle-checked: "
-    "scores iterate in exact integer micro-units (decimal(38,0) sums, "
+    "scores iterate in exact integer micro-units (64-bit long sums, "
     "max-renormalization by exact integer floor division) so the "
     f"{_HITS_ROUNDS}-round recurrence replays bit-identically as "
     "unrolled HUGEINT SQL.  Scale: per half-round one score-onto-edges "
-    "join + one partial-agg'd groupBy (the pagerank shuffle shape), a "
-    "1-row broadcast max panel, per-round localCheckpoint lineage "
-    "truncation; both top-k cuts are distributed TakeOrdered.",
+    "join + one partial-agg'd groupBy (the pagerank shuffle shape) and "
+    "an eager localCheckpoint that truncates lineage, with the round's "
+    "max read as an observe() metric during that checkpoint job; both "
+    "top-k cuts are distributed TakeOrdered.",
 )
 def x_hits_suppliers(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.graph import hits
@@ -1190,10 +1191,11 @@ ORDER BY p DESC, node LIMIT {_PREXACT_TOPK}
     "path — not just its row count — is value-hash-verified.  The float "
     "variant remains the probability-semantics operator (numpy-pinned); "
     "this one is the differential-testing form.  Scale: per round one "
-    "score-onto-edges join + one partial-agg'd inflow groupBy + a 1-row "
-    "(dangling, N) broadcast panel folded into the same plan, "
-    "localCheckpoint per round; the top-k cut is distributed "
-    "TakeOrdered.  (operators/graph.pagerank_exact)",
+    "score-onto-edges join + one partial-agg'd inflow groupBy and an "
+    "eager localCheckpoint, with the dangling mass read as an exact "
+    "observe() metric during that checkpoint job (N is measured once at "
+    "setup); the top-k cut is distributed TakeOrdered.  "
+    "(operators/graph.pagerank_exact)",
 )
 def x_pagerank_exact(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.graph import pagerank_exact

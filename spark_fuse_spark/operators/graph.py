@@ -1,4 +1,6 @@
-"""Distributed connected components for duplicate clustering.
+"""Graph operators: connected components for duplicate clustering, and
+iterative scoring (PageRank, HITS, personalized PageRank, label
+propagation).
 
 Near-dup detection (MinHash-LSH / SimHash / embedding LSH — see
 ``operators.dedup``) emits PAIRS, but a dedup pipeline needs CLUSTERS:
@@ -17,14 +19,29 @@ shuffle-bounded way to do this on a massive edge list:
 * each round is ``localCheckpoint``-ed so the loop does not build an
   unbounded lineage / replay chain.
 
+The scoring operators run a fixed number of rounds over an edge list
+persisted once; a round is one join of the score table onto the edges
+and one partial-agg'd inflow ``groupBy`` — two shuffles.  Float
+:func:`pagerank` and :func:`pagerank_exact` share one such loop
+(:func:`_power_rounds`) and differ only in their arithmetic.
+
+Checkpoint rule (:func:`_round_checkpoint`): every round's state is
+checkpointed so lineage stays bounded.  A round checkpoint is eager only
+when it observes a metric that the next round folds in as a literal (the
+PageRank dangling mass, the HITS renormalization max) — its job is the
+action that reads the metric, so no separate scalar job runs.  Every
+other round checkpoint is lazy: the next action computes it.
+
 Reference parity: the reference engine has no clustering stage at all
-(its ``similarity`` module stops at pairwise scores), so this operator
-is net-new surface built for the training-data pipeline brief.
+(its ``similarity`` module stops at pairwise scores), so connected
+components is net-new surface built for the training-data pipeline brief.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -45,32 +62,44 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     return fwd.union(rev).where(F.col("u") != F.col("v"))
 
 
-def _round_checkpoint(df: DataFrame, checkpoint_dir: "str | None", eager: bool = True) -> DataFrame:
+def _round_checkpoint(
+    df: DataFrame, checkpoint_dir: "str | None", metric: "Column | None" = None
+) -> "DataFrame | tuple[DataFrame, object]":
     """Per-round lineage truncation for the iterative operators.
+
+    Lazy — the next action computes it — unless ``metric`` (one
+    aggregate Column over ``df``) is given: then the checkpoint job is
+    the action that observes it, so it runs eagerly and ``(df, metric
+    value)`` is returned.
 
     Default (``checkpoint_dir=None``): ``localCheckpoint`` — blocks live
     on executors WITHOUT replication, so on a multi-node cluster an
     executor loss mid-query kills the query (the truncated lineage has
     no recompute path).  That is the right trade in local mode and for
-    restartable batch queries; for long iterative jobs on a lossy
-    cluster pass ``checkpoint_dir`` (an HDFS/object-store path) to
-    switch every round to a RELIABLE ``checkpoint`` — survives executor
-    loss at the cost of writing each round's state to the checkpoint
-    dir.  Results are identical either way; only fault-tolerance and
-    per-round I/O differ.
+    restartable batch queries; on a lossy cluster pass
+    ``checkpoint_dir`` (an HDFS/object-store path) for a RELIABLE
+    ``checkpoint`` that survives executor loss at the cost of writing
+    each round's state there.  Results are identical either way.
     """
+    eager = metric is not None
+    if eager:
+        obs = Observation()
+        df = df.observe(obs, metric.alias("__metric"))
     if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    # setCheckpointDir makes a fresh ``<dir>/<uuid>`` subdirectory on every
-    # call, so only switch when the current one is not under checkpoint_dir
-    # (compared in the Hadoop-qualified form getCheckpointDir reports)
-    path = sc._jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
-    want = path.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(path).toString()
-    current = sc.getCheckpointDir()
-    if current is None or current.rsplit("/", 1)[0] != want:
-        sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint(eager=eager)
+        df = df.localCheckpoint(eager=eager)
+    else:
+        sc = df.sparkSession.sparkContext
+        # setCheckpointDir makes a fresh ``<dir>/<uuid>`` subdirectory on
+        # every call, so only switch when the current one is not under
+        # checkpoint_dir (compared in the Hadoop-qualified form
+        # getCheckpointDir reports)
+        path = sc._jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+        want = path.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(path).toString()
+        current = sc.getCheckpointDir()
+        if current is None or current.rsplit("/", 1)[0] != want:
+            sc.setCheckpointDir(checkpoint_dir)
+        df = df.checkpoint(eager=eager)
+    return (df, obs.get["__metric"]) if eager else df
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -163,8 +192,7 @@ def connected_components(
     """
     # normalize high→low at entry so the per-round boundary invariant is
     # "directed (u > v), deduped" from round 0: _symmetrize regenerates
-    # both directions anyway, so the symmetric graph is identical.  LAZY
-    # checkpoint: round 1's action computes it.
+    # both directions anyway, so the symmetric graph is identical
     a = F.col(id_a).cast("long")
     b = F.col(id_b).cast("long")
     edges = _round_checkpoint(
@@ -172,16 +200,13 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct(),
         checkpoint_dir,
-        eager=False,
     )
     converged = False
     for _ in range(max_iterations):
         # LAZY checkpoint: the star test below is the round's only action
         # and it reads ``edges``, so one job computes the star rounds,
         # stores the checkpoint blocks and decides convergence
-        edges = _round_checkpoint(
-            _small_star(_large_star(_symmetrize(edges))), checkpoint_dir, eager=False
-        )
+        edges = _round_checkpoint(_small_star(_large_star(_symmetrize(edges))), checkpoint_dir)
         ends = edges.select(
             F.explode(
                 F.array(
@@ -264,144 +289,104 @@ def dedup_clusters(
     )
 
 
+def _power_graph(edges: DataFrame, src: str, dst: str) -> "tuple[DataFrame, DataFrame, int, int]":
+    """Setup shared by :func:`pagerank` and :func:`pagerank_exact`: the
+    persisted ``(u, v)`` edges without null endpoints, the persisted
+    ``(node, deg)`` out-degree table over src ∪ dst (0 for a dangling
+    node), the node count N and the dangling-node count — sized by one
+    aggregate job that also materializes both frames (released again on
+    an empty graph)."""
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).dropna().persist()
+    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    nodes = e.select(F.col("u").alias("node")).union(e.select(F.col("v").alias("node"))).distinct()
+    nd = (
+        nodes.join(deg, nodes.node == deg.u, "left")
+        .select("node", F.coalesce("d", F.lit(0)).cast("long").alias("deg"))
+        .persist()
+    )
+    n, n_dangling = nd.agg(F.count(F.lit(1)), F.count(F.when(F.col("deg") == 0, 1))).first()
+    if n == 0:
+        e.unpersist()
+        nd.unpersist()
+    return e, nd, n, n_dangling
+
+
+def _power_rounds(
+    e: DataFrame, nd: DataFrame, score: Column, dangling: float, push: Column,
+    update: Callable[[Column, float], Column], iterations: int, checkpoint_dir: "str | None",
+) -> DataFrame:
+    """The round loop of :func:`pagerank` and :func:`pagerank_exact` over
+    :func:`_power_graph`'s ``e`` and ``nd`` (released at the end);
+    returns ``(node, deg, score)``.
+
+    ``score`` is each node's round-0 score and ``dangling`` the round-0
+    dangling mass (score summed over zero-out-degree nodes).  Per round
+    each node sends ``push`` (over its ``score`` and ``deg``) along every
+    out-edge, the shares are summed per destination, ``update(inflow,
+    dangling)`` is the new score, and the round's eager checkpoint job
+    observes the next dangling mass.  The out-degree rides inside the
+    score table, so a round is one join and one inflow ``groupBy``.
+    """
+    state = nd.select("node", "deg", score.alias("score"))
+    for _ in range(iterations):
+        inflow = (
+            e.join(state.where(F.col("deg") > 0), e.u == F.col("node"))
+            .groupBy(F.col("v").alias("__node"))
+            .agg(F.sum(push).alias("__in"))
+        )
+        state, dangling = _round_checkpoint(
+            nd.join(inflow, nd.node == inflow["__node"], "left").select(
+                "node", "deg", update(F.coalesce("__in", F.lit(0)), dangling).alias("score")
+            ),
+            checkpoint_dir,
+            F.coalesce(F.sum(F.when(F.col("deg") == 0, F.col("score"))), F.lit(0)),
+        )
+    e.unpersist()
+    nd.unpersist()
+    return state
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Power-iteration PageRank over an edge list (Brin & Page 1998),
     with dangling-mass redistribution.
 
-    The iterative-workload pattern on Spark done right:
+    Each round is two partial-agg'd shuffles over an edge list
+    persisted once (:func:`_power_rounds`), and the rank table is
+    eagerly checkpointed every round — without this the lineage doubles
+    per iteration and planning time, task binaries, and failure-replay
+    cost grow without bound.  The dangling mass (nodes with no
+    out-edges) is folded back uniformly; it is an ``observe`` metric of
+    each round's checkpoint job, and the round-0 mass follows from the
+    setup job's dangling-node count.  Ranks sum to 1 at every step
+    (probability semantics), so results are comparable across graphs.
 
-    * each iteration is exactly TWO shuffles — a join of the rank table
-      onto the edge list by ``src`` and a contribution ``groupBy`` on
-      ``dst`` — both partial-agg'd; the edge list itself is persisted
-      once and reused every round, so the heavy relation is shuffled
-      for the join but never recomputed from source;
-    * every ``checkpoint_every`` rounds (default EVERY round) the rank
-      table is eagerly ``localCheckpoint``-ed — without this the lineage
-      doubles per iteration and planning time, task binaries, and
-      failure-replay cost grow without bound (the classic
-      iterative-Spark trap).  Every-round is the right default because
-      the rank table has multiple consumers per round (the contribution
-      join and the next state build; on the ``checkpoint_every > 1``
-      panel path also the dangling 1-row broadcast subtree): with
-      un-checkpointed lineage each consumer
-      re-executes the previous rounds' joins independently — the
-      broadcast panel does not share work with the main plan — so a
-      k-round checkpoint interval multiplies, not adds, replayed work
-      (measured: every-3 → every-1 cut the 10-round suppliers graph
-      from ~7.7 s to ~4 s at sf0.1 with bit-identical floats, the
-      checkpointed state being only O(nodes) rows);
-    * dangling mass (nodes with no out-edges) is folded back uniformly
-      via ONE scalar readout per round on the rank table (O(nodes),
-      not O(edges)) — on the default every-round-checkpoint path the
-      readout is an ``observe`` metric collected DURING the round's
-      checkpoint job, so no separate per-round panel job exists at all
-      (for ``checkpoint_every > 1`` it falls back to the broadcast
-      1-row-aggregate panel, which needs no round action);
-    * ranks sum to 1 at every step (probability semantics), so
-      convergence is monitorable and results comparable across graphs.
+    ``checkpoint_dir``: see :func:`_round_checkpoint` (reliable
+    checkpoints for lossy clusters).
 
-    ``checkpoint_dir``: see :func:`_round_checkpoint` — pass a reliable
-    checkpoint directory to survive executor loss on a real cluster;
-    the local default truncates lineage without replication.
-
-    Returns ``node, rank`` (unnormalized node set = src ∪ dst).
-    Deterministic up to float reduction order (the observe readout
-    merges per-task partials in task-completion order, the panel
-    aggregate in partition order — both are unordered float sums within
-    the operator's declared determinism contract); validated against a
-    numpy power iteration in tests.
+    Returns ``node, rank`` (unnormalized node set = src ∪ dst; edges
+    with a null endpoint are dropped).  Deterministic up to float
+    reduction order (the observed dangling mass merges per-task partial
+    sums in completion order); validated against a numpy power
+    iteration in tests.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    )
-    e = e.persist()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("__deg"))
-    nodes = e.select(F.col("u").alias("node")).union(
-        e.select(F.col("v").alias("node"))
-    ).distinct()
-    # out-degree per node, 0 for dangling (no out-edges) — the degree
-    # rides INSIDE the iterated state table, so no per-iteration
-    # rank-onto-degree join exists at all (one fewer shuffle per round)
-    nd = nodes.join(deg, nodes.node == deg.u, "left").select(
-        "node", F.coalesce("__deg", F.lit(0)).alias("__deg")
-    ).persist()
-    n = nd.count()  # one job; also materializes the persisted edge set
+    e, nd, n, n_dangling = _power_graph(edges, src, dst)
     if n == 0:  # no edges: no nodes to score
-        e.unpersist()
-        nd.unpersist()
         return nd.select("node", F.lit(0.0).alias("rank"))
-    state = nd.withColumn("rank", F.lit(1.0 / n))
-
-    dm_agg = F.coalesce(
-        F.sum(F.when(F.col("__deg") == 0, F.col("rank"))), F.lit(0.0)
-    ).alias("__dm")
-    observe_dm = checkpoint_every == 1
-    if observe_dm:
-        # round-0 dangling mass: one O(nodes) scalar job over the
-        # persisted state (the same aggregate the panel path folds into
-        # its broadcast subtree); each subsequent round's mass then
-        # rides the round's checkpoint job as an observed metric
-        dm = state.where(F.col("__deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0))
-        ).first()[0]
-
-    for i in range(iterations):
-        contrib = (
-            e.join(state.where(F.col("__deg") > 0), e.u == F.col("node"))
-            .select(F.col("v").alias("node"), (F.col("rank") / F.col("__deg")).alias("__c"))
-            .groupBy("node")
-            .agg(F.sum("__c").alias("__in"))
-        )
-        if observe_dm:
-            state = (
-                nd.join(contrib, "node", "left")
-                .select(
-                    "node",
-                    "__deg",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (F.coalesce("__in", F.lit(0.0)) + F.lit(dm / n))
-                    ).alias("rank"),
-                )
-            )
-            obs = Observation()
-            state = _round_checkpoint(state.observe(obs, dm_agg), checkpoint_dir)
-            dm = obs.get["__dm"] or 0.0
-        else:
-            # dangling mass as a 1-row aggregate folded into the SAME
-            # plan (broadcast scalar panel) — not a per-iteration driver
-            # collect.  Required when intermediate rounds have no action
-            # to observe through.
-            dangling = state.where(F.col("__deg") == 0).agg(dm_agg)
-            state = (
-                nd.join(contrib, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    "__deg",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (F.coalesce("__in", F.lit(0.0)) + F.col("__dm") / n)
-                    ).alias("rank"),
-                )
-            )
-            if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-                state = _round_checkpoint(state, checkpoint_dir)
-    e.unpersist()
-    nd.unpersist()
-    return state.select("node", "rank")
+    ranks = _power_rounds(
+        e, nd, F.lit(1.0 / n), n_dangling / n, F.col("score") / F.col("deg"),
+        lambda inflow, dm: F.lit((1.0 - damping) / n) + F.lit(damping) * (inflow + F.lit(dm / n)),
+        iterations, checkpoint_dir,
+    )
+    return ranks.select("node", F.col("score").alias("rank"))
 
 
 def label_propagation(
@@ -427,29 +412,18 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    adj = _symmetrize(edges).select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    )
+    adj = _symmetrize(edges).select(F.col("u").alias("src"), F.col("v").alias("dst"))
     nodes = adj.select(F.col("src").alias("node")).distinct()
-    adjp = _round_checkpoint(
-        adj.unionAll(
-            nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-        ),
-        checkpoint_dir,
-    )
+    loops = nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+    adjp = _round_checkpoint(adj.unionAll(loops), checkpoint_dir)
     labels = nodes.select("node", F.col("node").alias("lbl"))
     for _ in range(rounds):
-        labels = (
+        labels = _round_checkpoint(
             adjp.join(labels.withColumnRenamed("node", "dst"), "dst")
             .groupBy(F.col("src").alias("node"))
-            .agg(F.min("lbl").alias("lbl"))
-            # LAZY: each round's label table sits on a single path (only
-            # the next round reads it), so the caller's one action
-            # materializes the whole bounded loop — one job instead of
-            # one blocking job per round — while each round's checkpoint
-            # still truncates lineage as it is computed.
+            .agg(F.min("lbl").alias("lbl")),
+            checkpoint_dir,
         )
-        labels = _round_checkpoint(labels, checkpoint_dir, eager=False)
     return labels
 
 
@@ -482,27 +456,20 @@ def hits(
     renormalization numerator is bounded by
     ``max_raw × scale ≤ (10⁶ × deg) × 10⁶``, safe to deg ≤ 9.2 × 10⁶
     for the single hottest node; for graphs hotter than that pass a
-    smaller ``scale``.  (The previous decimal(38,0) formulation had no
-    such bound but paid BigDecimal aggregation on every edge of every
-    half-round; the values are identical — property-checked in tests —
-    and the integer DIV is exact where a float ``/`` would round above
-    2⁵³.)
+    smaller ``scale``.  The integer DIV is exact where a float ``/``
+    would round above 2⁵³.
 
     Per half-round: one join of the score table onto the edge list and
-    one partial-agg'd ``groupBy`` — two shuffles, same as pagerank —
-    plus the round's MAX read off as an ``observe`` metric DURING the
-    half-round's checkpoint job and folded back as an integer literal:
-    no separate max-panel job, no broadcast.  The metric is an exact
-    integer max (reduction-order-free), so scores are bit-identical to
-    the broadcast-panel formulation.  The RAW sums are
-    ``localCheckpoint``-ed per half-round — the renormalized frame has
-    two consumers (the next half-round's join and, for the final round,
-    the returned frame), and the checkpoint doubles as the per-round
-    lineage truncation.  Multi-edges count with multiplicity —
-    ``distinct()`` the input for the unweighted semantics.
+    one partial-agg'd ``groupBy`` — two shuffles, same as pagerank.  The
+    RAW sums are checkpointed per half-round (the renormalized frame has
+    two consumers: the next half-round's join and, for the final round,
+    the returned frame), and the exact integer MAX is an ``observe``
+    metric of that checkpoint job, folded back as an integer literal.
+    Multi-edges count with multiplicity — ``distinct()`` the input for
+    the unweighted semantics.
 
-    ``checkpoint_dir``: see :func:`_round_checkpoint` — reliable
-    checkpoints for lossy clusters; local-mode default unchanged.
+    ``checkpoint_dir``: see :func:`_round_checkpoint` (reliable
+    checkpoints for lossy clusters).
 
     Returns ``(hubs, authorities)`` as ``(node, score_micro)`` frames.
     """
@@ -511,9 +478,7 @@ def hits(
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
 
     def _renorm(raw: DataFrame) -> DataFrame:
-        obs = Observation()
-        raw = _round_checkpoint(raw.observe(obs, F.max("raw").alias("m")), checkpoint_dir)
-        m = obs.get["m"]
+        raw, m = _round_checkpoint(raw, checkpoint_dir, F.max("raw"))
         if m is None:  # empty graph — no rows to renormalize either way
             m = 1
         return raw.select(
@@ -541,10 +506,7 @@ def hits(
         )
         hubs = _renorm(h_raw)
     # every half-round is eagerly checkpointed inside _renorm, so the
-    # returned frames read only checkpoint blocks (+ broadcast panels)
-    # and never ``e`` — release it instead of leaking an edge-sized
-    # cached frame into the session's storage pool (guide §5; this was
-    # the one persist site in the repo without a matching unpersist)
+    # returned frames never read ``e``: release its cached blocks
     e.unpersist()
     return hubs, auths
 
@@ -581,8 +543,8 @@ def personalized_pagerank(
     (``src, dst, deg``), so each round is ONE join of the sparse score
     table onto the edges plus ONE partial-agg'd ``groupBy(dst)`` and a
     node-keyed full-outer with the seed panel; the score table is
-    ``localCheckpoint``-ed every round so lineage stays bounded.  The
-    score table stays SPARSE — only nodes reachable from the seeds in
+    lazily ``localCheckpoint``-ed every round so lineage stays bounded.
+    The score table stays SPARSE — only nodes reachable from the seeds in
     <= k hops ever hold a row, so personalization over a small segment
     touches a small frontier even on a 100 TB graph.
 
@@ -605,27 +567,15 @@ def personalized_pagerank(
         den = F.col("d") * F.lit(damp_den)
         infl = (
             ewd.join(state, ewd.u == state.node)
-            .select(
-                F.col("v").alias("node"),
-                ((num - num % den) / den).cast("long").alias("sh"),
-            )
+            .select(F.col("v").alias("node"), ((num - num % den) / den).cast("long").alias("sh"))
             .groupBy("node")
             .agg(F.sum("sh").alias("infl"))
         )
-        state = (
-            infl.join(
-                seed_panel.select("node", F.lit(scale).cast("long").alias("restart")),
-                "node",
-                "full_outer",
-            )
-            .select(
-                "node",
-                (
-                    F.coalesce("infl", F.lit(0)) + F.coalesce("restart", F.lit(0))
-                ).cast("long").alias("p"),
-            )
+        restart = seed_panel.select("node", F.lit(scale).cast("long").alias("restart"))
+        p = (F.coalesce("infl", F.lit(0)) + F.coalesce("restart", F.lit(0))).cast("long")
+        state = _round_checkpoint(
+            infl.join(restart, "node", "full_outer").select("node", p.alias("p")), checkpoint_dir
         )
-        state = _round_checkpoint(state, checkpoint_dir)
     e.unpersist()
     ewd.unpersist()
     seed_panel.unpersist()
@@ -646,7 +596,9 @@ def pagerank_exact(
     redistribution, like :func:`pagerank`) in EXACT integer arithmetic,
     so the k-round recurrence replays bit-identically on any engine —
     the discipline :func:`hits` and :func:`personalized_pagerank`
-    established, applied to the flagship float iteration.
+    established, applied to the flagship float iteration on the same
+    round loop (:func:`_power_rounds`; ``checkpoint_dir``: see
+    :func:`_round_checkpoint`).
 
     Semantics (documented, deterministic, engine-portable; total mass
     starts at ``N * scale`` micro-units, one ``scale`` per node):
@@ -668,18 +620,6 @@ def pagerank_exact(
     :func:`pagerank` when probability semantics matter more than
     replayability).
 
-    Scale shape (same as :func:`pagerank`): per round one score-onto-
-    edges join + one partial-agg'd inflow ``groupBy`` — two shuffles.
-    The dangling mass is an ``observe`` metric collected DURING each
-    round's checkpoint job (exact integer sum — reduction-order-free,
-    so scores are bit-identical to the previous broadcast-panel
-    formulation, which cost one extra panel job per round); the node
-    count N is a loop constant measured once at setup (the same job
-    that materializes the persisted degree table).  State is
-    checkpointed every round so lineage stays bounded
-    (``checkpoint_dir``: see :func:`_round_checkpoint`).  Sums ride in
-    64-bit longs.
-
     Integer-width bound (why plain longs are exact here, the same
     discipline as :func:`hits`): total mass never exceeds its starting
     value ``N × scale`` (floor division only leaks mass), every score
@@ -687,88 +627,24 @@ def pagerank_exact(
     intermediate is ``p × damp_num`` (and ``dang × damp_num``), so a
     long overflows only when ``N × scale × damp_num ≥ 2⁶³`` — i.e.
     N ≈ 10¹¹ nodes at the default ``scale=10⁶``; pass a smaller
-    ``scale`` for larger graphs.  (The previous decimal(38,0)
-    formulation had no such bound but paid BigDecimal aggregation on
-    every edge of every round; the integer ``DIV`` is exact, so the
-    scores are bit-identical.)
+    ``scale`` for larger graphs.
 
-    Returns ``(node, deg, score_micro)`` over the full node set.
+    Returns ``(node, deg, score_micro)`` over the full node set (edges
+    with a null endpoint are dropped).
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    nd = (
-        nodes.join(deg, nodes.node == deg.u, "left")
-        .select("node", F.coalesce("d", F.lit(0)).cast("long").alias("deg"))
-        .persist()
-    )
-    teleport = (damp_den - damp_num) * scale // damp_den
-
-    # the out-degree rides INSIDE the iterated state table (same design
-    # as the float :func:`pagerank`), so the per-edge push divides by
-    # state's own ``deg`` — no separate (edges ⋈ degree) relation exists
-    # at all.  The previous ``ewd = e.join(deg)`` paid a one-time
-    # edge-sized sort-merge join and cached an edge-sized table for a
-    # column the join partner already carried.
-    # one setup job sizes the graph (N is a loop constant; the initial
-    # dangling mass is exactly n_dangling × scale because every node
-    # starts at ``scale``) and materializes the persisted nd + e
-    sizes = nd.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.when(F.col("deg") == 0, F.lit(1)).cast("long")), F.lit(0).cast("long")
-        ).alias("nd0"),
-    ).first()
-    n = int(sizes["n"])
+    e, nd, n, n_dangling = _power_graph(edges, src, dst)
     if n == 0:  # no edges: no nodes to score
-        e.unpersist()
-        nd.unpersist()
         return nd.select("node", "deg", F.lit(int(scale)).cast("long").alias("score_micro"))
-    dang = int(sizes["nd0"]) * int(scale)
-
-    dang_agg = F.coalesce(
-        F.sum(F.when(F.col("deg") == 0, F.col("p"))), F.lit(0).cast("long")
-    ).alias("dang")
-    state = nd.select("node", "deg", F.lit(int(scale)).cast("long").alias("p"))
-    for _ in range(iterations):
-        # the per-node dangling share is pure integer floor division on
-        # two loop scalars — computed on the driver (Python ints, exact,
-        # identical to the previous in-plan DIV) and folded in as a
-        # literal: the former 1-row broadcast (dang, n) panel cost one
-        # extra job per round for the same two numbers
-        dang_share = (dang * int(damp_num)) // (n * int(damp_den))
-        infl = (
-            e.join(state, e.u == state.node)
-            .select(
-                F.col("v").alias("inode"),
-                F.expr(
-                    f"(p * {int(damp_num)}L) DIV (deg * {int(damp_den)}L)"
-                ).alias("sh"),
-            )
-            .groupBy("inode")
-            .agg(F.sum("sh").alias("infl"))
-        )
-        obs = Observation()
-        state = (
-            nd.join(infl, nd.node == infl.inode, "left")
-            .select(
-                "node",
-                "deg",
-                (
-                    F.lit(int(teleport) + dang_share).cast("long")
-                    + F.coalesce("infl", F.lit(0).cast("long"))
-                ).alias("p"),
-            )
-            .observe(obs, dang_agg)
-        )
-        state = _round_checkpoint(state, checkpoint_dir)
-        dang = int(obs.get["dang"] or 0)
-    e.unpersist()
-    nd.unpersist()
-    return state.select("node", "deg", F.col("p").alias("score_micro"))
+    dn, dd = int(damp_num), int(damp_den)
+    teleport = (dd - dn) * int(scale) // dd
+    scores = _power_rounds(
+        # every node starts at ``scale``; the per-node dangling share is
+        # exact floor division on two loop scalars, so it is a literal
+        e, nd, F.lit(int(scale)).cast("long"), n_dangling * int(scale),
+        F.expr(f"(score * {dn}L) DIV (deg * {dd}L)"),
+        lambda inflow, dang: F.lit(teleport + dang * dn // (n * dd)).cast("long") + inflow,
+        iterations, checkpoint_dir,
+    )
+    return scores.select("node", "deg", F.col("score").alias("score_micro"))

@@ -126,26 +126,58 @@ def test_pagerank_empty_edges_returns_empty_frame(spark):
     assert out.count() == 0
 
 
+def test_null_endpoint_edges_are_dropped(spark, small_graph):
+    """An edge with a null src or dst adds no node and moves no score."""
+    from spark_fuse_spark.operators.graph import pagerank_exact
+
+    edges, df = small_graph
+    with_nulls = spark.createDataFrame(edges + [(None, 2), (3, None)], "src long, dst long")
+
+    def exact(frame):
+        return sorted(map(tuple, pagerank_exact(frame, iterations=5).collect()))
+
+    def ranks(frame):
+        return {r.node: r.rank for r in pagerank(frame, iterations=5).collect()}
+
+    assert exact(with_nulls) == exact(df)
+    assert ranks(with_nulls) == pytest.approx(ranks(df), abs=1e-12)
+
+
 def test_reliable_checkpoint_dir_matches_default(spark, small_graph, tmp_path):
     """``checkpoint_dir=`` switches every round to a reliable checkpoint;
-    results must equal the localCheckpoint default exactly, and the
-    session's checkpoint directory is set once, not once per round."""
-    from spark_fuse_spark.operators.graph import connected_components, hits, pagerank_exact
+    results must equal the localCheckpoint default exactly (float ranks
+    up to reduction order), and the session's checkpoint directory is
+    set once, not once per round."""
+    from spark_fuse_spark.operators.graph import (
+        connected_components,
+        hits,
+        label_propagation,
+        pagerank_exact,
+        personalized_pagerank,
+    )
 
     _, df = small_graph
     pairs = df.select(df.src.alias("id_a"), df.dst.alias("id_b"))
+    undirected = df.select(df.src.alias("u"), df.dst.alias("v"))
+    seeds = spark.createDataFrame([(0,), (3,)], "node long")
     ckpt = str(tmp_path / "ckpt")
 
     def run(checkpoint_dir):
         cc = connected_components(pairs, checkpoint_dir=checkpoint_dir)
         pr = pagerank_exact(df, iterations=4, checkpoint_dir=checkpoint_dir)
         hubs, auths = hits(df, iterations=3, checkpoint_dir=checkpoint_dir)
-        return [sorted(map(tuple, f.collect())) for f in (cc, pr, hubs, auths)]
+        lp = label_propagation(undirected, rounds=2, checkpoint_dir=checkpoint_dir)
+        ppr = personalized_pagerank(df, seeds, iterations=3, checkpoint_dir=checkpoint_dir)
+        ranks = pagerank(df, iterations=4, checkpoint_dir=checkpoint_dir)
+        exact = [sorted(map(tuple, f.collect())) for f in (cc, pr, hubs, auths, lp, ppr)]
+        return exact, {r.node: r.rank for r in ranks.collect()}
 
-    default = run(None)
-    assert run(ckpt) == default
+    default, default_ranks = run(None)
+    exact, ranks = run(ckpt)
+    assert exact == default
+    assert ranks == pytest.approx(default_ranks, abs=1e-12)
     sc = spark.sparkContext
     current = sc.getCheckpointDir()
     assert current is not None and "/ckpt/" in current
-    assert run(ckpt) == default
+    assert run(ckpt)[0] == default
     assert sc.getCheckpointDir() == current

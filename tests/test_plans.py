@@ -495,6 +495,12 @@ JOB_BUDGETS = {
     "c_scd2_point_in_time": 21,
     "c_scd2_temporal_join": 23,
     "d_dedup_clusters": 31,
+    "x_hits_suppliers": 32,
+    "x_label_propagation": 21,
+    "x_modularity": 33,
+    "x_pagerank_exact": 43,
+    "x_pagerank_suppliers": 63,
+    "x_ppr_segment": 23,
 }
 
 
@@ -616,8 +622,6 @@ NESTED_LOOP_OK = {
     "t_unigram_surprisal": "1-row broadcast corpus-total for the surprisal denominator",
     "t_tfidf_keywords": "1-row broadcast doc-count for the idf numerator",
     "t_length_buckets": "1-row broadcast decile-cutoff panel",
-    "x_pagerank_suppliers": "1-row broadcast dangling-mass panel per iteration",
-    "x_pagerank_exact": "1-row broadcast (dangling, N) panel per iteration (exact-integer twin of x_pagerank_suppliers)",
     "q_cohens_kappa": "1-row chance-agreement panel crossed into the 1-row totals panel",
     "x_ktruss": "1-row n_nodes and prev-round-count panels crossed into the 1-row truss stats",
     "q_capture_recapture": "1-row n2 and m count panels crossed into the 1-row n1 panel",
@@ -667,7 +671,6 @@ NESTED_LOOP_OK = {
     "e_dow_seasonality": "1-row total/fit-SS panel crossed into the 7-row dow table",
     "x_kcore": "1-row previous-round count panel crossed into the single core-summary row",
     "q_rfm_segments": "1-row max-date/n panels + three 4-element quintile-boundary arrays broadcast into the customer rollup; boundary hits theta-join on the crossing condition",
-    "x_hits_suppliers": "1-row broadcast max-score renorm panel per HITS half-round",
     "e_skipgram_pairs": "1-row broadcast pair-total panel for the lift denominator",
     "v_mmr_topk": "broadcast query panel x corpus scan + <>-joined pool-bounded pairwise panel (25 rows/side)",
     "e_next_event_accuracy": "1-row broadcast split-point panel over the transition stream",

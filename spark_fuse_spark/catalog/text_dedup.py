@@ -1006,8 +1006,8 @@ def t_fim(spark: SparkSession, sf: str) -> DataFrame:
 
 def _lsh_recall_oracle(k: int, num_hashes: int, bands: int, threshold: float, seed: int) -> str:
     """Counts-level twin of the MinHash pipeline: exact pairs, LSH
-    candidates (with >= 1 shared shingle, matching the Spark verify
-    join's inner semantics), true positives, recall."""
+    candidates (with >= 1 shared shingle, matching the Spark verify,
+    which drops pairs sharing none), true positives, recall."""
     from ..functions.hashing import minhash_coefficients
 
     coeffs = minhash_coefficients(num_hashes, seed)
@@ -1052,89 +1052,64 @@ FROM nx CROSS JOIN nc CROSS JOIN tp
     "d_lsh_recall_audit",
     oracle=_lsh_recall_oracle(k=3, num_hashes=32, bands=8, threshold=0.5, seed=42),
     doc="in-engine recall audit of the MinHash LSH index: exact "
-    "inverted-index Jaccard pairs (the ground truth) vs the banded "
-    "candidate set — n_exact, n_candidates (>= 1 shared shingle, the "
-    "verify join's reach), true positives, recall@0.5.  This is how an "
+    "prefix-filtered Jaccard pairs (the ground truth) vs the banded "
+    "candidate set — n_exact, n_candidates (banded pairs sharing >= 1 "
+    "shingle), true positives, recall@0.5.  This is how an "
     "operator team MEASURES its approximate-dedup quality instead of "
     "trusting the 1-(1-s^r)^b formula: run the audit on a sample "
-    "stratum, tune bands/rows, then roll out.  Scale: both pipelines "
-    "are the existing O(docs x bands) / inverted-index shapes; the "
-    "audit adds only count aggregates and a pair equi-join.",
+    "stratum, tune bands/rows, then roll out.  Scale: both candidate "
+    "sets are the existing O(docs x bands) / prefix-join shapes, "
+    "verified once by set intersection over their flagged union; the "
+    "audit adds only count aggregates.",
 )
 def d_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from ..operators.dedup import (
+        _band_candidates,
         _exploded_shingles,
         _jaccard_prefix_candidates,
+        _minhash_mins,
+        _shared_shingles,
         _shingle_sets,
-        minhash_lsh_pairs,
     )
 
     docs = load_table(spark, sf, "documents")
-    # ONE exploded-shingle frame and ONE intersection-count verify for
-    # both pipelines.  The audit used to run the exact prefix pipeline
-    # and the banded MinHash pipeline each through their own
-    # inverted-index verify join — but every count it reports can be
-    # read off a single verify over the UNION of the two candidate
-    # sets: prefix filtering is exact (every Jaccard >= 0.5 pair is a
-    # prefix candidate — the same guarantee d_ngram_jaccard rests on),
-    # so
-    #   n_exact          = union-verified pairs with jaccard >= 0.5
-    #   n_candidate_pairs = union-verified pairs in the banded set
-    #                       (>= 1 shared shingle — the old verify
-    #                       join's inner semantics)
-    #   n_true_positives  = banded AND jaccard >= 0.5.
-    # The comparisons run on the UNROUNDED shared/(na+nb-shared), the
-    # exact value both old pipelines filtered on.
+    # ONE exploded-shingle frame, ONE shingle-set table and ONE verify
+    # for both pipelines: every count the audit reports can be read off
+    # a single verify over the UNION of the exact prefix candidates and
+    # the banded candidates, each pair flagged ``__b`` = 1 when banded.
+    # Prefix filtering is exact (every Jaccard >= 0.5 pair is a prefix
+    # candidate — the same guarantee d_ngram_jaccard rests on), so
+    #   n_exact           = union-verified pairs with jaccard >= 0.5
+    #   n_candidate_pairs = union-verified pairs with __b = 1
+    #                       (the verify keeps pairs sharing >= 1 shingle)
+    #   n_true_positives  = __b = 1 AND jaccard >= 0.5.
+    # The comparisons run on the UNROUNDED shared/(na+nb-shared).
     e = _exploded_shingles(docs, "text", "doc_id", 3).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    banded = minhash_lsh_pairs(
-        docs, k=3, num_hashes=32, bands=8, threshold=0.0, seed=42,
-        verify=False, _exploded=e,
-    )  # eagerly checkpointed inside — bands only, no verify join
+    # the sets feed the prefix self-join and both verify legs
+    sets = _shingle_sets(e).persist(StorageLevel.MEMORY_AND_DISK)
+    banded = _band_candidates(_minhash_mins(e, 32, 42), 32, 8)
     union_cands = (
-        _jaccard_prefix_candidates(_shingle_sets(e), 0.5)
-        .unionByName(banded)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        _jaccard_prefix_candidates(sets, 0.5)
+        .withColumn("__b", F.lit(0))
+        .unionByName(banded.withColumn("__b", F.lit(1)))
+        .groupBy("id_a", "id_b")
+        .agg(F.max("__b").alias("__b"))
     )
-    cand_ids = (
-        union_cands.select(F.col("id_a").alias("__cid"))
-        .union(union_cands.select(F.col("id_b").alias("__cid")))
-        .distinct()
-    )
-    ce = e.join(F.broadcast(cand_ids), F.col("__id") == F.col("__cid"), "left_semi")
-    a = ce.select(F.col("__id").alias("id_a"), F.col("__n").alias("na"), "__h")
-    b = ce.select(F.col("__id").alias("id_b"), F.col("__n").alias("nb"), "__h")
-    # candidate-PAIR semi BEFORE the intersection groupBy (the semi key
-    # is a subset of the group keys, so row- and group-level filtering
-    # are identical — same move as _verify_candidate_pairs): the
-    # aggregate only builds union-candidate groups instead of every
-    # co-occurring pair among candidate ids
-    shared = (
-        a.join(b, "__h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(F.broadcast(union_cands), ["id_a", "id_b"], "left_semi")
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    shared = _shared_shingles(union_cands, sets)
     jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    marked = shared.join(
-        F.broadcast(banded.select("id_a", "id_b", F.lit(1).alias("__b"))),
-        ["id_a", "id_b"],
-        "left",
-    )
-    counts = marked.agg(
+    counts = shared.agg(
         F.coalesce(F.sum((jac >= 0.5).cast("long")), F.lit(0)).alias("n_exact_pairs"),
         F.coalesce(F.sum("__b").cast("long"), F.lit(0)).alias("n_candidate_pairs"),
         F.coalesce(
             F.sum(F.when((F.col("__b") == 1) & (jac >= 0.5), 1)), F.lit(0)
         ).cast("long").alias("n_true_positives"),
-    ).localCheckpoint(eager=True)  # 1 row; releases e/union_cands eagerly
+    ).localCheckpoint(eager=True)  # 1 row; releases the persisted inputs eagerly
     e.unpersist()
-    union_cands.unpersist()
+    sets.unpersist()
     return counts.select(
         "n_exact_pairs",
         "n_candidate_pairs",

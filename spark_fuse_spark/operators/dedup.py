@@ -19,6 +19,14 @@ Five strategies, all shuffle-architected for 100 TB:
 * :func:`embedding_neardup_pairs` — exact cosine-threshold pairs over an
   embedding column (see ``operators.similarity`` for the ANN variants).
 
+Every exact shingle-pair operator (Jaccard prefix, containment, the
+three MinHash variants) verifies its candidate pairs the same way:
+:func:`_shared_shingles` joins each pair to both documents' shingle
+sets and counts ``size(array_intersect)`` — two id-keyed joins over
+O(candidates) rows.  The only shingle-hash self-joins are the
+candidate generators (prefix and containment) and the
+``threshold <= 0`` census (:func:`_shingle_census`).
+
 Every hash is the *portable* md5-based hash from ``functions.hashing``,
 so all five strategies are differential-testable against a SQL oracle —
 including the probabilistic ones, because given identical hash values
@@ -111,19 +119,57 @@ def ngram_jaccard_pairs(
     """
     if prefix_filter and threshold > 0.0:
         return jaccard_prefix_pairs(df, text_col, id_col, k, threshold)
-    e = _exploded_shingles(df, text_col, id_col, k)
-    a = e.select(
-        F.col("__id").alias("id_a"), F.col("__n").alias("na"), F.col("__h").alias("__h")
+    return _jaccard_rows(
+        _shingle_census(_exploded_shingles(df, text_col, id_col, k)), threshold
     )
-    b = e.select(
-        F.col("__id").alias("id_b"), F.col("__n").alias("nb"), F.col("__h").alias("__h")
-    )
-    shared = (
+
+
+def _shingle_census(e: DataFrame) -> DataFrame:
+    """``(id_a, id_b, na, nb, shared)`` for EVERY pair sharing ≥ 1
+    shingle: the plain inverted-index self-join on shingle hash plus a
+    per-pair count (candidate volume Σ_h df(h)²).  Only the
+    ``threshold <= 0`` census paths use it — no prefix can prune a pair
+    that shares one shingle."""
+    a = e.select(F.col("__id").alias("id_a"), F.col("__n").alias("na"), "__h")
+    b = e.select(F.col("__id").alias("id_b"), F.col("__n").alias("nb"), "__h")
+    return (
         a.join(b, "__h")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
+
+
+def _shared_shingles(candidates: DataFrame, sets: DataFrame) -> DataFrame:
+    """The candidate rows plus ``(na, nb, shared)``, for each
+    ``(id_a, id_b)`` candidate pair that shares ≥ 1 shingle — the one
+    exact verify of every candidate-generating operator.  Any other
+    candidate column passes through.
+
+    ``sets`` holds one row per document, ``(__id, __n, __hs)``; the
+    pair meets both documents' sets through two id-keyed joins and
+    ``shared`` is ``size(array_intersect)``, so the work is O(candidates)
+    rows, never a shingle-level co-occurrence join.  Pairs with no
+    shared shingle are dropped: a candidate means "≥ 1 shared shingle",
+    and a Jaccard or containment of 0 is never a result."""
+    a = sets.select(
+        F.col("__id").alias("id_a"), F.col("__n").alias("na"), F.col("__hs").alias("__ha")
+    )
+    b = sets.select(
+        F.col("__id").alias("id_b"), F.col("__n").alias("nb"), F.col("__hs").alias("__hb")
+    )
+    return (
+        candidates.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("shared", F.size(F.array_intersect("__ha", "__hb")))
+        .drop("__ha", "__hb")
+        .where(F.col("shared") > 0)
+    )
+
+
+def _jaccard_rows(shared: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` rows of a shared-count frame whose exact
+    Jaccard ``shared / (na + nb - shared)`` is ≥ threshold."""
     jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
     return (
         shared.withColumn("jaccard", jac)
@@ -162,26 +208,23 @@ def containment_pairs(
     Σ_h df(h)² to Σ_h pf(h)·df(h), where pf counts prefix occurrences:
     a corpus-stopword shingle ranks LAST in every document's
     rarest-first order, so its pf is ~0 and it no longer detonates the
-    self-join.  Verification (true intersection counts, restricted to
-    candidate ids) then computes the exact containment.  ``threshold <= 0``
-    falls back to the plain inverted-index join (no prefix can prune an
-    every-shared-shingle census).
+    self-join.  Each candidate pair is then verified by
+    ``size(array_intersect)`` over the two documents' shingle sets — the
+    same per-document table the prefix is cut from.  ``threshold <= 0``
+    falls back to the plain inverted-index census (no prefix can prune
+    an every-shared-shingle census).
     """
     if threshold > 0.0:
         return _containment_prefix_pairs(df, text_col, id_col, k, threshold)
-    e = _exploded_shingles(df, text_col, id_col, k)
-    a = e.select(
-        F.col("__id").alias("id_a"), F.col("__n").alias("na"), F.col("__h").alias("__h")
+    return _containment_rows(
+        _shingle_census(_exploded_shingles(df, text_col, id_col, k)), threshold
     )
-    b = e.select(
-        F.col("__id").alias("id_b"), F.col("__n").alias("nb"), F.col("__h").alias("__h")
-    )
-    shared = (
-        a.join(b, "__h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+
+
+def _containment_rows(shared: DataFrame, threshold: float) -> DataFrame:
+    """``(id_contained, id_container, containment)`` rows of a
+    shared-count frame whose ``shared / min(na, nb)`` is ≥ threshold;
+    the contained doc has fewer shingles, ties to the smaller id."""
     cont = F.col("shared") / F.least(F.col("na"), F.col("nb"))
     a_contained = (F.col("na") < F.col("nb")) | (
         (F.col("na") == F.col("nb")) & (F.col("id_a") < F.col("id_b"))
@@ -209,59 +252,28 @@ def _containment_prefix_pairs(
     argument).  The designated-smaller side (fewer distinct shingles,
     ties to the smaller id) contributes only its rarest-shingle prefix
     to the join; the other side contributes its full index."""
-
+    # the exploded frame feeds the set build AND the candidate join's
+    # full-index side; the sets feed the prefix and both verify legs
     e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
-    candidates = _containment_prefix_candidates(e, threshold).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sets = _shingle_sets(e).persist(StorageLevel.MEMORY_AND_DISK)
+    candidates = _containment_prefix_candidates(e, sets, threshold)
+    out = _containment_rows(_shared_shingles(candidates, sets), threshold).localCheckpoint(
+        eager=True
     )
-    cand_ids = (
-        candidates.select(F.col("id_a").alias("__cid"))
-        .union(candidates.select(F.col("id_b").alias("__cid")))
-        .distinct()
-    )
-    ce = e.join(F.broadcast(cand_ids), F.col("__id") == F.col("__cid"), "left_semi")
-    a = ce.select(F.col("__id").alias("id_a"), F.col("__n").alias("na"), "__h")
-    b = ce.select(F.col("__id").alias("id_b"), F.col("__n").alias("nb"), "__h")
-    # candidate-PAIR semi BEFORE the groupBy — same argument as
-    # _verify_candidate_pairs: the semi key is a subset of the group
-    # keys, so row-level and group-level filtering are identical, and
-    # the aggregate only builds candidate-pair groups
-    shared = (
-        a.join(b, "__h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(F.broadcast(candidates), ["id_a", "id_b"], "left_semi")
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    cont = F.col("shared") / F.least(F.col("na"), F.col("nb"))
-    a_contained = (F.col("na") < F.col("nb")) | (
-        (F.col("na") == F.col("nb")) & (F.col("id_a") < F.col("id_b"))
-    )
-    result = (
-        shared.withColumn("containment", cont)
-        .filter(F.col("containment") >= threshold)
-        .select(
-            F.when(a_contained, F.col("id_a")).otherwise(F.col("id_b")).alias(
-                "id_contained"
-            ),
-            F.when(a_contained, F.col("id_b")).otherwise(F.col("id_a")).alias(
-                "id_container"
-            ),
-            F.round("containment", 6).alias("containment"),
-        )
-    )
-    out = result.localCheckpoint(eager=True)
+    sets.unpersist()
     e.unpersist()
-    candidates.unpersist()
     return out
 
 
-def _containment_prefix_candidates(e: DataFrame, threshold: float) -> DataFrame:
+def _containment_prefix_candidates(
+    e: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
     """Candidate (id_a, id_b) pairs for the containment join: the
-    designated-smaller side's rarest-shingle prefix against the full
-    inverted index — join volume Σ_h pf(h)·df(h), exact per the
-    prefix argument in :func:`containment_pairs`."""
-    prefix = _prefix_rows(_shingle_sets(e), threshold)
+    designated-smaller side's rarest-shingle prefix (cut from the
+    :func:`_shingle_sets` table ``sets``) against the full inverted
+    index ``e`` — join volume Σ_h pf(h)·df(h), exact per the prefix
+    argument in :func:`containment_pairs`."""
+    prefix = _prefix_rows(sets, threshold)
     ps = prefix.select(F.col("__id").alias("__sid"), F.col("__n").alias("__sn"), "__h")
     fl = e.select(F.col("__id").alias("__lid"), F.col("__n").alias("__ln"), "__h")
     return (
@@ -286,84 +298,49 @@ def minhash_signatures(
     num_hashes: int = 32,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, sig array<long>[num_hashes]) MinHash signatures.
-
-    The permutation family is applied to each shingle hash inside a
-    single ``transform``; the per-doc min is ``array_min`` — zero
-    shuffles beyond the scan when signatures are computed inline, or one
-    narrow projection per document.
+    """(id, sig array<long>[num_hashes]) MinHash signatures: each
+    document's per-permutation minima (:func:`_minhash_mins`), one
+    partially aggregated shuffle of O(docs) rows.
     """
-    # Shape matters more than expression tricks here: explode the distinct
-    # shingle hashes to rows, apply the permutation family to the SCALAR
-    # hash, and take per-doc mins through a hash aggregate.  The aggregate
-    # gives (a) map-side partial mins — shuffle is O(docs), not
-    # O(shingles) — and (b) an optimizer barrier, so downstream band
-    # extraction reads plain attributes instead of re-evaluating the
-    # signature tree per reference (the naive nested-array form re-ran
-    # md5+decimal-pmod up to 32× per row; measured 60s → ~3s at sf0.1).
-    e = _exploded_shingles(df, text_col, id_col, k).withColumnRenamed("__id", id_col)
-    perms = minhash_permutations(F.col("__h"), num_hashes, seed)
-    aggs = [F.min(p).alias(f"__m{i}") for i, p in enumerate(perms)]
-    return (
-        e.groupBy(id_col)
-        .agg(*aggs)
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("sig"),
-        )
+    mins = _minhash_mins(_exploded_shingles(df, text_col, id_col, k), num_hashes, seed)
+    return mins.select(
+        F.col("__id").alias(id_col),
+        F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("sig"),
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    seed: int = 42,
-    verify: bool = True,
-    _exploded: "DataFrame | None" = None,
-) -> DataFrame:
-    """MinHash + LSH banding near-dup pairs.
+def _minhash_mins(e: DataFrame, num_hashes: int, seed: int) -> DataFrame:
+    """``(__id, __m0 … __m{num_hashes-1})``: each document's minimum of
+    every permutation over its exploded shingle hashes ``e``."""
+    # Shape matters more than expression tricks here: apply the
+    # permutation family to the SCALAR hash of each exploded row and take
+    # per-doc mins through a hash aggregate.  The aggregate gives (a)
+    # map-side partial mins — shuffle is O(docs), not O(shingles) — and
+    # (b) an optimizer barrier, so downstream band extraction reads plain
+    # attributes instead of re-evaluating the signature tree per
+    # reference (the naive nested-array form re-ran md5+decimal-pmod up
+    # to 32× per row; measured 60s → ~3s at sf0.1).
+    perms = minhash_permutations(F.col("__h"), num_hashes, seed)
+    return e.groupBy("__id").agg(*[F.min(p).alias(f"__m{i}") for i, p in enumerate(perms)])
 
-    ``num_hashes`` must divide into ``bands`` equal rows-per-band.  Docs
-    whose signature agrees on ALL rows of ≥1 band become candidates
-    (probability 1-(1-s^r)^b); candidates are verified with exact
-    Jaccard ≥ threshold when ``verify``.
 
-    Scale shape: candidates come from a groupBy on (band_index,
-    band_hash) — shuffle O(docs × bands); the O(n²) blow-up can only
-    happen inside a single bucket, which LSH keeps small by design.
-    """
+def _band_candidates(mins: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs, id_a < id_b, whose signatures
+    (``mins``, shaped like :func:`_minhash_mins`) agree on ALL rows of
+    ≥ 1 of ``bands`` bands.
+
+    Scale shape: a groupBy on (band_index, band values) — shuffle
+    O(docs × bands); the O(n²) blow-up can only happen inside a single
+    bucket, which LSH keeps small by design."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
-    # the exploded shingles feed the signature aggregate AND both sides of
-    # the verify self-join; without a persist Spark recomputes the
-    # tokenize+md5 subtree once per consumer (measured 4× at sf0.1).
-    # ``_exploded`` lets an audit caller share ONE persisted frame across
-    # the exact and banded pipelines instead of computing it per pipeline.
-    if _exploded is not None:
-        e = _exploded
-    else:
-        e = _exploded_shingles(df, text_col, id_col, k).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    perms = minhash_permutations(F.col("__h"), num_hashes, seed)
-    sigs = (
-        e.withColumnRenamed("__id", id_col)
-        .groupBy(id_col)
-        .agg(*[F.min(p).alias(f"__m{i}") for i, p in enumerate(perms)])
-    )
-
     # bucket key = the band's raw min-tuple.  Hashing the tuple (the
     # oracle uses sha256) only relabels buckets — equality of the tuple
     # IS equality of the hash — so the Spark side skips the array
     # assembly + sha2 chain entirely.
-    band_rows = sigs.select(
-        F.col(id_col),
+    band_rows = mins.select(
+        "__id",
         F.explode(
             F.array(
                 *[
@@ -375,12 +352,10 @@ def minhash_lsh_pairs(
                 ]
             )
         ).alias("b"),
-    ).select(F.col(id_col), "b.*")
-
+    ).select("__id", "b.*")
     # pair generation by bucket groupBy, not a self-join: the signature
     # subtree is evaluated ONCE, and the quadratic step is confined to
     # within-bucket id lists (small by LSH design)
-    ids = F.array_sort(F.collect_list(F.col(id_col)))
     pair_structs = F.filter(
         F.flatten(
             F.transform(
@@ -393,87 +368,59 @@ def minhash_lsh_pairs(
         ),
         lambda s: s.id_a < s.id_b,
     )
-    candidates = (
+    return (
         band_rows.groupBy("band", *[f"v{j}" for j in range(r)])
-        .agg(ids.alias("__ids"))
+        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
         .filter(F.size("__ids") > 1)
         .select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
+        .select("p.id_a", "p.id_b")
         .distinct()
     )
-    if not verify:
-        out = candidates.localCheckpoint(eager=True)
-        if _exploded is None:
-            e.unpersist()
-        return out
-    candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
-    return _verify_candidate_pairs(e, candidates, threshold, release_e=_exploded is None)
 
 
-def _verify_candidate_pairs(
-    e: DataFrame,
-    candidates: DataFrame,
-    threshold: float,
-    release_e: bool = True,
-    release_candidates: bool = True,
+def _unordered_sets(e: DataFrame) -> DataFrame:
+    """``(__id, __n, __hs)`` per document in no particular order — one
+    groupBy over the exploded frame, for callers that verify but cut no
+    prefix (the df-ordered :func:`_shingle_sets` would cost an extra
+    frequency aggregate and join)."""
+    return e.groupBy("__id").agg(
+        F.count(F.lit(1)).alias("__n"), F.collect_list("__h").alias("__hs")
+    )
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 3,
+    num_hashes: int = 32,
+    bands: int = 8,
+    threshold: float = 0.5,
+    seed: int = 42,
 ) -> DataFrame:
-    """Exact-Jaccard verification over the CANDIDATE SET ONLY — the point
-    of candidate generation (LSH bands) is to never pay the all-pairs
-    cost.  The LSH callers hold no per-document shingle set, and building
-    one (as :func:`jaccard_prefix_pairs` does) would add a shuffle they do
-    not need, so they verify on the exploded frame.  Restricting the
-    inverted-index join to ids appearing in ``candidates`` keeps this
-    stage O(|candidates|), and the result is
-    identical to candidates ∩ {exact pairs ≥ threshold} (non-candidate
-    pairs are dropped either way; candidate pairs get their true
-    Jaccard).
+    """MinHash + LSH banding near-dup pairs.
 
-    ``e`` is the persisted exploded-shingle frame (``__id/__n/__h``);
-    ``candidates`` is an ``(id_a, id_b)`` frame — persisted by the caller
-    unless the caller owns the release itself (``release_candidates=False``,
-    e.g. :func:`bbit_minhash_pairs`, whose candidates are a projection of
-    its persisted ``scored`` frame: unpersisting the projection here would
-    be a no-op, the real release is ``scored.unpersist()`` downstream).
-    Persisted inputs are released after the checkpointed result
-    materializes unless the matching ``release_*`` flag is False.
+    ``num_hashes`` must divide into ``bands`` equal rows-per-band.  Docs
+    whose signature agrees on ALL rows of ≥1 band become candidates
+    (probability 1-(1-s^r)^b); each candidate is verified with exact
+    Jaccard ≥ threshold over the two documents' shingle sets
+    (:func:`_shared_shingles`), so a pair sharing no shingle is never
+    returned, even at ``threshold=0``.
+
+    Scale shape: candidates come from a groupBy on (band_index,
+    band_hash) — shuffle O(docs × bands) (:func:`_band_candidates`); the
+    verify is two id-keyed joins over O(candidates) rows.
     """
-    cand_ids = (
-        candidates.select(F.col("id_a").alias("__cid"))
-        .union(candidates.select(F.col("id_b").alias("__cid")))
-        .distinct()
-    )
-    ce = e.join(F.broadcast(cand_ids), F.col("__id") == F.col("__cid"), "left_semi")
-    a = ce.select(F.col("__id").alias("id_a"), F.col("__n").alias("na"), "__h")
-    b = ce.select(F.col("__id").alias("id_b"), F.col("__n").alias("nb"), "__h")
-    # candidate-PAIR semi-join BEFORE the intersection groupBy, not after:
-    # the id restriction alone still admits every co-occurrence row among
-    # candidate documents (Σ_h dfc(h)² — measured 1.27M rows vs 310k
-    # candidate pairs at sf0.1), and since the semi key (id_a, id_b) is a
-    # subset of the group keys, filtering rows first is identical to
-    # filtering groups after — but the aggregate now only builds
-    # candidate-pair groups (verify phase 3.17 → 2.28 s at sf0.1)
-    shared = (
-        a.join(b, "__h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(F.broadcast(candidates), ["id_a", "id_b"], "left_semi")
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    result = (
-        shared.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    # materialize (lineage-truncated) so the persisted inputs can be
+    # the exploded shingles feed the signature aggregate AND the set
+    # build; without a persist Spark recomputes the tokenize+md5 subtree
+    # once per consumer (measured 4× at sf0.1)
+    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    candidates = _band_candidates(_minhash_mins(e, num_hashes, seed), num_hashes, bands)
+    # materialize (lineage-truncated) so the persisted input can be
     # released eagerly instead of leaking for the session lifetime
-    # (``release_e=False`` when the caller shares ``e`` across pipelines
-    # and releases it itself)
-    out = result.localCheckpoint(eager=True)
-    if release_e:
-        e.unpersist()
-    if release_candidates:
-        candidates.unpersist()
+    out = _jaccard_rows(_shared_shingles(candidates, _unordered_sets(e)), threshold)
+    out = out.localCheckpoint(eager=True)
+    e.unpersist()
     return out
 
 
@@ -784,10 +731,9 @@ def jaccard_prefix_pairs(
     table ``(__id, __n, __hs)`` (:func:`_shingle_sets`) that serves both
     stages — the prefix is a ``slice`` of the sorted set, and each
     candidate pair is verified by joining both documents' sets onto it
-    and counting ``size(array_intersect(ha, hb))``.  The verify is two
-    id-keyed joins over O(candidates) rows; no shingle-level
-    co-occurrence join and no intersection ``groupBy`` exist.  The
-    quadratic join term is Σ pf(h)² where pf counts only prefix
+    and counting ``size(array_intersect(ha, hb))``
+    (:func:`_shared_shingles`) — two id-keyed joins over O(candidates)
+    rows.  The quadratic join term is Σ pf(h)² where pf counts only prefix
     occurrences, never the plain index's Σ df(h)².
     """
     if not (0.0 < threshold <= 1.0):
@@ -796,22 +742,8 @@ def jaccard_prefix_pairs(
     e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
     # the sets feed the prefix self-join and both verify legs
     sets = _shingle_sets(e).persist(StorageLevel.MEMORY_AND_DISK)
-    a = sets.select(
-        F.col("__id").alias("id_a"), F.col("__n").alias("na"), F.col("__hs").alias("__ha")
-    )
-    b = sets.select(
-        F.col("__id").alias("id_b"), F.col("__n").alias("nb"), F.col("__hs").alias("__hb")
-    )
-    shared = F.size(F.array_intersect("__ha", "__hb"))
-    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    result = (
-        _jaccard_prefix_candidates(sets, threshold)
-        .join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", "na", "nb", shared.alias("shared"))
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    result = _jaccard_rows(
+        _shared_shingles(_jaccard_prefix_candidates(sets, threshold), sets), threshold
     )
     # materialize (lineage-truncated) so the persisted inputs can be
     # released eagerly instead of leaking for the session lifetime
@@ -896,9 +828,8 @@ def incremental_minhash_pairs(
     exactly the base pipeline's result minus the old×old block
     (differentially tested against that identity).
     """
-    cand = minhash_lsh_pairs(
-        df, text_col, id_col, k, num_hashes, bands, threshold, seed, verify=False
-    )
+    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = _band_candidates(_minhash_mins(e, num_hashes, seed), num_hashes, bands)
     flags = df.select(F.col(id_col).alias("__fid"), F.col(is_new_col).alias("__new"))
     fa = flags.withColumnRenamed("__fid", "__fa").withColumnRenamed("__new", "__na")
     fb = flags.withColumnRenamed("__fid", "__fb").withColumnRenamed("__new", "__nb")
@@ -907,10 +838,11 @@ def incremental_minhash_pairs(
         .join(fb, F.col("id_b") == F.col("__fb"))
         .where(F.col("__na") | F.col("__nb"))
         .select("id_a", "id_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
-    return _verify_candidate_pairs(e, touching, threshold)
+    out = _jaccard_rows(_shared_shingles(touching, _unordered_sets(e)), threshold)
+    out = out.localCheckpoint(eager=True)
+    e.unpersist()
+    return out
 
 
 def bbit_minhash_pairs(
@@ -939,9 +871,7 @@ def bbit_minhash_pairs(
     shape to minhash_lsh_pairs — O(docs x bands) band shuffle, verify
     confined to candidates.
     """
-    r = num_hashes // bands
     e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
-    perms = minhash_permutations(F.col("__h"), num_hashes, seed)
     # b-bit keeps the low bits OF THE MINIMUM, so the min is taken over
     # the full permuted values: `min(p) % 4`, never `min(p % 4)`.
     # three consumers (band explode + both sides of the estimate join)
@@ -949,52 +879,20 @@ def bbit_minhash_pairs(
     # 30-permutation min-aggregation over the exploded shingles runs
     # once, not three times
     sigs = (
-        e.withColumnRenamed("__id", id_col)
-        .groupBy(id_col)
-        .agg(*[(F.min(p) % 4).alias(f"__b{i}") for i, p in enumerate(perms)])
+        _minhash_mins(e, num_hashes, seed)
+        .select("__id", *[(F.col(f"__m{i}") % 4).alias(f"__m{i}") for i in range(num_hashes)])
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    band_rows = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        *[F.col(f"__b{i * r + j}").alias(f"v{j}") for j in range(r)],
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(F.col(id_col), "b.*")
-    ids = F.array_sort(F.collect_list(F.col(id_col)))
-    pair_structs = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("__ids"),
-                lambda x: F.transform(
-                    F.col("__ids"),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        ),
-        lambda s: s.id_a < s.id_b,
-    )
-    cand = (
-        band_rows.groupBy("band", *[f"v{j}" for j in range(r)])
-        .agg(ids.alias("__ids"))
-        .where(F.size("__ids") > 1)
-        .select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    cand = _band_candidates(sigs, num_hashes, bands)
+    # exact Jaccard first, so the b-bit estimate is only computed for the
+    # pairs that are returned
+    exact = _jaccard_rows(_shared_shingles(cand, _unordered_sets(e)), threshold)
     # b-bit agreement fraction -> bias-corrected estimate
     sa = sigs.select(
-        F.col(id_col).alias("id_a"), *[F.col(f"__b{i}").alias(f"a{i}") for i in range(num_hashes)]
+        F.col("__id").alias("id_a"), *[F.col(f"__m{i}").alias(f"a{i}") for i in range(num_hashes)]
     )
     sb = sigs.select(
-        F.col(id_col).alias("id_b"), *[F.col(f"__b{i}").alias(f"b{i}") for i in range(num_hashes)]
+        F.col("__id").alias("id_b"), *[F.col(f"__m{i}").alias(f"b{i}") for i in range(num_hashes)]
     )
     agree = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
@@ -1004,25 +902,14 @@ def bbit_minhash_pairs(
         F.lit(0.0),
         (agree.cast("double") / num_hashes - 0.25) / 0.75,
     )
-    scored = (
-        cand.join(sa, "id_a")
+    out = (
+        exact.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(est, 6).alias("bbit_estimate"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("id_a", "id_b", F.round(est, 6).alias("bbit_estimate"), "jaccard")
+        .localCheckpoint(eager=True)
     )
-    # exact-Jaccard verification restricted to the banded candidates (the
-    # result is candidates ∩ {jaccard ≥ threshold} with true values, so
-    # computing the full exact pair set first would be pure waste — and
-    # at corpus scale the unrestricted join is exactly the cost the
-    # banding exists to avoid)
-    exact = _verify_candidate_pairs(
-        e, scored.select("id_a", "id_b"), threshold, release_candidates=False
-    )
-    out = scored.join(exact, ["id_a", "id_b"]).select(
-        "id_a", "id_b", "bbit_estimate", "jaccard"
-    ).localCheckpoint(eager=True)
-    scored.unpersist()
     sigs.unpersist()
+    e.unpersist()
     return out
 
 

@@ -475,7 +475,7 @@ def hits(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).dropna().persist()
 
     def _renorm(raw: DataFrame) -> DataFrame:
         raw, m = _round_checkpoint(raw, checkpoint_dir, F.max("raw"))

@@ -64,6 +64,38 @@ def test_minhash_lsh_recall_vs_exact(spark, sf_small):
     assert lsh == exact  # full recall at s>=0.5 with b=8,r=4 on this corpus
 
 
+def test_shared_shingles_drops_pairs_sharing_no_shingle(spark, near_dup_docs):
+    """The one exact verify keeps a candidate pair only when its two
+    documents share >= 1 shingle — the meaning of d_lsh_recall_audit's
+    n_candidate_pairs and of its oracle.  (1, 4) and (4, 5) are
+    candidates sharing no 3-shingle: they are dropped, never reported
+    with shared = 0.  Both per-document set tables give the same counts."""
+    from spark_fuse_spark.operators.dedup import (
+        _exploded_shingles,
+        _shared_shingles,
+        _shingle_sets,
+        _unordered_sets,
+    )
+
+    e = _exploded_shingles(near_dup_docs, "text", "doc_id", 3)
+    cands = spark.createDataFrame([(1, 2), (1, 3), (1, 4), (4, 5)], "id_a long, id_b long")
+    for sets in (_shingle_sets(e), _unordered_sets(e)):
+        got = {
+            (r.id_a, r.id_b): (r.na, r.nb, r.shared)
+            for r in _shared_shingles(cands, sets).collect()
+        }
+        assert got == {(1, 2): (11, 11, 11), (1, 3): (11, 11, 10)}
+
+
+def test_minhash_lsh_threshold_zero_never_returns_zero_jaccard(near_dup_docs):
+    """One row per band (r = 1) makes every doc pair whose minimum
+    shingle agrees under any permutation a candidate; at threshold 0 the
+    verify still returns only pairs sharing a shingle."""
+    got = minhash_lsh_pairs(near_dup_docs, k=3, num_hashes=16, bands=16, threshold=0.0).collect()
+    assert {(r.id_a, r.id_b) for r in got} >= {(1, 2), (1, 3), (2, 3)}
+    assert all(r.jaccard > 0 for r in got)
+
+
 def test_simhash_identical_texts_distance_zero(near_dup_docs):
     sigs = {r.doc_id: r.simhash for r in simhash_signatures(near_dup_docs, k=1).collect()}
     assert sigs[1] == sigs[2]

@@ -128,7 +128,7 @@ def test_pagerank_empty_edges_returns_empty_frame(spark):
 
 def test_null_endpoint_edges_are_dropped(spark, small_graph):
     """An edge with a null src or dst adds no node and moves no score."""
-    from spark_fuse_spark.operators.graph import pagerank_exact
+    from spark_fuse_spark.operators.graph import hits, pagerank_exact
 
     edges, df = small_graph
     with_nulls = spark.createDataFrame(edges + [(None, 2), (3, None)], "src long, dst long")
@@ -139,8 +139,12 @@ def test_null_endpoint_edges_are_dropped(spark, small_graph):
     def ranks(frame):
         return {r.node: r.rank for r in pagerank(frame, iterations=5).collect()}
 
+    def hubs_auths(frame):
+        return [{r.node: r.score_micro for r in f.collect()} for f in hits(frame, iterations=3)]
+
     assert exact(with_nulls) == exact(df)
     assert ranks(with_nulls) == pytest.approx(ranks(df), abs=1e-12)
+    assert hubs_auths(with_nulls) == hubs_auths(df)
 
 
 def test_reliable_checkpoint_dir_matches_default(spark, small_graph, tmp_path):

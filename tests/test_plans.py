@@ -369,7 +369,7 @@ CONTRACTS = {
     # b-bit minhash: band-groupBy candidates + candidate-restricted exact
     # verify, both lineage-truncated by the eager localCheckpoint (shape
     # pinned by the band/verify tests + the oracle); the final plan may
-    # only sort the checkpointed scored pairs
+    # only sort the checkpointed pairs
     "d_minhash_bbit": PlanExpectation(max_exchanges=1),
     # Lorenz deciles: two-phase prefix rank (range partition + local
     # windows + bounded offsets broadcast); the cumulative step is now the
@@ -494,7 +494,12 @@ JOB_BUDGETS = {
     "c_mor_upsert_read": 13,
     "c_scd2_point_in_time": 21,
     "c_scd2_temporal_join": 23,
+    "d_containment": 17,
     "d_dedup_clusters": 31,
+    "d_lsh_recall_audit": 20,
+    "d_minhash_bbit": 19,
+    "d_minhash_incremental": 18,
+    "d_minhash_lsh": 16,
     "x_hits_suppliers": 32,
     "x_label_propagation": 21,
     "x_modularity": 33,
@@ -947,13 +952,14 @@ def test_executed_metrics_containment_inverted_index(spark, sf_small):
     from spark_fuse_spark.operators.dedup import (
         _containment_prefix_candidates,
         _exploded_shingles,
+        _shingle_sets,
     )
     from spark_fuse_spark.plans import shuffle_summary
     from spark_fuse_spark.tables import load_table
 
     docs = load_table(spark, sf_small, "documents")
     e = _exploded_shingles(docs, "text", "doc_id", 3)
-    cand = _containment_prefix_candidates(e, 0.9)
+    cand = _containment_prefix_candidates(e, _shingle_sets(e), 0.9)
     n_docs = docs.count()
     assert cand.count() < n_docs * 5  # candidates near-linear in docs
     cand.collect()
@@ -1072,7 +1078,7 @@ def test_prefix_guard_kills_hot_shingle_candidates(spark):
     e = _exploded_shingles(docs, "text", "doc_id", 3)
 
     jac_cand = _jaccard_prefix_candidates(_shingle_sets(e), 0.5).count()
-    con_cand = _containment_prefix_candidates(e, 0.9).count()
+    con_cand = _containment_prefix_candidates(e, _shingle_sets(e), 0.9).count()
     # O(docs × prefix), not O(df²): the hot shingle contributes nothing
     assert jac_cand < 50, f"jaccard candidates exploded: {jac_cand}"
     assert con_cand < 50, f"containment candidates exploded: {con_cand}"

@@ -7,7 +7,10 @@ container ships no typer/rich) and extended with catalog commands:
 * ``read --format rest|sparql|qdrant --config '<json>' [--show N]``;
 * ``queries`` — list the analytic query catalog;
 * ``run --query NAME [--sf DIR]`` — execute a catalog query and show it;
-* ``parity [NAMES...]`` — differential-oracle sweep vs DuckDB;
+* ``parity [NAMES...] [--threads N]`` — differential-oracle sweep vs
+  DuckDB, one PASS/FAIL line with wall seconds per query;
+* ``profile NAMES... [--passes N]`` — per pass, one JSON line with a
+  query's build and collect seconds and its Spark job and stage counts;
 * ``tokenize train|apply`` — BPE merge-table training / application;
 * ``table history|show|rollback|vacuum`` — versioned-table maintenance.
 """
@@ -17,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import time
 
 __all__ = ["main", "build_parser"]
 
@@ -64,6 +68,14 @@ def build_parser() -> argparse.ArgumentParser:
     )
     parity.add_argument("names", nargs="*", help="queries to check (default: every oracle-paired query)")
     parity.add_argument("--sf", default=None, help="scale-factor directory (default $SPARK_GRAFT_SF_DIR)")
+    parity.add_argument("--threads", type=int, default=1, help="queries in flight at once")
+
+    profile = sub.add_parser(
+        "profile", help="time build and collect of catalog queries; count their jobs and stages"
+    )
+    profile.add_argument("names", nargs="+", help="queries to profile")
+    profile.add_argument("--sf", default=None, help="scale-factor directory (default $SPARK_GRAFT_SF_DIR)")
+    profile.add_argument("--passes", type=int, default=1, help="runs per query, one JSON line each")
 
     tok = sub.add_parser(
         "tokenize", help="train or apply a BPE merge table (functions/bpe)"
@@ -194,12 +206,51 @@ def _cmd_parity(args: argparse.Namespace) -> int:
 
     spark = create_session(app_name="cli-parity")
     spark.sparkContext.setLogLevel("ERROR")
-    results = run_parity(spark, args.sf or default_sf_dir(), args.names or None)
-    for r in results:
-        print(f"{'PASS' if r.ok else 'FAIL'} {r.name}" + ("" if r.ok else f"  {r.detail}"))
-    failures = [r.name for r in results if not r.ok]
-    print(f"{len(results) - len(failures)}/{len(results)} pass; failures: {failures}")
+    t0 = time.perf_counter()
+    results = []
+    for r in run_parity(spark, args.sf or default_sf_dir(), args.names or None, args.threads):
+        print(f"{'PASS' if r.ok else 'FAIL'} {r.name} {r.seconds:.2f}s"
+              + ("" if r.ok else f"  {r.detail}"), flush=True)
+        results.append(r)
+    failures = sorted(r.name for r in results if not r.ok)
+    print(f"{len(results) - len(failures)}/{len(results)} pass "
+          f"in {time.perf_counter() - t0:.0f}s; failures: {failures}")
     return 0 if not failures else 1
+
+
+def _cmd_profile(args: argparse.Namespace) -> int:
+    from spark_fuse_spark.catalog import load_all
+    from spark_fuse_spark.plans import count_jobs
+    from spark_fuse_spark.session import create_session
+    from spark_fuse_spark.tables import default_sf_dir
+
+    registry = load_all()
+    unknown = [n for n in args.names if n not in registry]
+    if unknown:
+        print(f"unknown queries {unknown}; `queries` lists the catalog", file=sys.stderr)
+        return 2
+    spark = create_session(app_name="cli-profile")
+    spark.sparkContext.setLogLevel("ERROR")
+    sf_dir = args.sf or default_sf_dir()
+
+    def build_and_collect(spec) -> "tuple[float, float]":
+        t0 = time.perf_counter()
+        df = spec.spark(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.collect()
+        return t1 - t0, time.perf_counter() - t1
+
+    for name in args.names:
+        for p in range(args.passes):
+            (build_s, action_s), jobs, stages = count_jobs(
+                spark, f"profile:{name}:{p}:{time.time_ns()}",
+                lambda: build_and_collect(registry[name]),
+            )
+            print(json.dumps({
+                "name": name, "pass": p, "build_s": round(build_s, 3),
+                "action_s": round(action_s, 3), "jobs": jobs, "stages": stages,
+            }), flush=True)
+    return 0
 
 
 def _cmd_tokenize(args: argparse.Namespace) -> int:
@@ -305,6 +356,8 @@ def main(argv: "list[str] | None" = None) -> int:
         return _cmd_run(args)
     if args.command == "parity":
         return _cmd_parity(args)
+    if args.command == "profile":
+        return _cmd_profile(args)
     if args.command == "tokenize":
         return _cmd_tokenize(args)
     if args.command == "table":

@@ -67,6 +67,7 @@ __all__ = [
     "PlanExpectation",
     "check_plan",
     "unbounded_global_windows",
+    "count_jobs",
 ]
 
 
@@ -501,3 +502,26 @@ def shuffle_summary(df: DataFrame) -> dict:
         "shuffle_bytes": shuffle_bytes,
         "rows_out": top["metrics"]["numOutputRows"] if top else None,
     }
+
+
+def count_jobs(spark, group: str, thunk):
+    """Run ``thunk()`` under the Spark job group ``group`` and return
+    ``(result, jobs, stages)``: the number of jobs it fired (AQE
+    query-stage jobs included) and of distinct stages those jobs list
+    (skipped stages included).  The counts come from the status tracker,
+    so they need no UI.  Use a fresh ``group`` per call: the tracker
+    counts every retained job ever run under it."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    stages: set[int] = set()
+    for job_id in job_ids:
+        info = tracker.getJobInfo(job_id)
+        if info is not None:
+            stages.update(info.stageIds)
+    return result, len(job_ids), len(stages)

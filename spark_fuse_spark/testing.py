@@ -9,22 +9,14 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from .tables import TABLE_NAMES
 
 
 def duckdb_connection(sf_dir: str):
@@ -72,6 +64,7 @@ class ParityResult:
     oracle_rows: int = 0
     detail: str = ""
     mismatches: list = field(default_factory=list)
+    seconds: float = 0.0
 
 
 def compare_frames(name: str, spark_df: DataFrame, con, oracle: str,
@@ -117,21 +110,41 @@ def compare_frames(name: str, spark_df: DataFrame, con, oracle: str,
     )
 
 
-def run_parity(spark: SparkSession, sf_dir: str, names: "list[str] | None" = None):
-    """Run every oracle-bearing catalog query and compare. Returns results."""
+def run_parity(spark: SparkSession, sf_dir: str, names: "list[str] | None" = None,
+               threads: int = 1):
+    """Run every oracle-bearing catalog query (or those in ``names``)
+    against its DuckDB oracle; yield one :class:`ParityResult` per query
+    as each finishes, with its wall seconds (build, collect and oracle).
+
+    ``threads`` queries run at once.  A query's wall time is mostly fixed
+    per-job planning and scheduling overhead that leaves the cores idle,
+    so overlapping queries shortens the sweep.  Spark job submission is
+    thread-safe; DuckDB connections are not, so each thread opens its
+    own.  The few queries that register temp views all run at the same
+    ``sf_dir``, so concurrent re-registration writes identical
+    definitions.  With ``threads > 1`` results arrive in completion
+    order and each query's seconds include contention."""
     from .catalog import load_all
 
     registry = load_all()
-    con = duckdb_connection(sf_dir)
-    results = []
-    for qname, spec in sorted(registry.items()):
-        if names and qname not in names:
-            continue
-        if spec.oracle is None:
-            continue
+    todo = sorted(
+        n for n, spec in registry.items()
+        if spec.oracle is not None and (not names or n in names)
+    )
+    local = threading.local()
+
+    def check(qname: str) -> ParityResult:
+        if not hasattr(local, "con"):
+            local.con = duckdb_connection(sf_dir)
+        spec = registry[qname]
+        t0 = time.perf_counter()
         try:
-            df = spec.spark(spark, sf_dir)
-            results.append(compare_frames(qname, df, con, spec.oracle))
+            res = compare_frames(qname, spec.spark(spark, sf_dir), local.con, spec.oracle)
         except Exception as exc:  # surface, don't abort the sweep
-            results.append(ParityResult(qname, False, detail=f"EXCEPTION: {exc}"))
-    return results
+            res = ParityResult(qname, False, detail=f"EXCEPTION: {exc}")
+        res.seconds = time.perf_counter() - t0
+        return res
+
+    with ThreadPoolExecutor(max_workers=threads) as pool:
+        for fut in as_completed([pool.submit(check, n) for n in todo]):
+            yield fut.result()

@@ -180,9 +180,26 @@ def test_cli_run_check_rows_only_is_clean(capsys):
     assert "rows-only" in out
 
 
-def test_cli_parity_subcommand(capsys):
+def test_cli_parity_subcommand(capsys, monkeypatch):
     assert main(
         ["parity", "q_count_distinct", "--sf", "/root/testdata/sf0.001"]
     ) == 0
     out = capsys.readouterr().out
     assert "PASS q_count_distinct" in out and "1/1 pass" in out
+    assert main(
+        ["parity", "q_count_distinct", "q01_pricing_summary", "--sf",
+         "/root/testdata/sf0.001", "--threads", "2"]
+    ) == 0
+    out = capsys.readouterr().out
+    assert "PASS q01_pricing_summary" in out and "2/2 pass" in out
+    import dataclasses
+
+    from spark_fuse_spark.catalog import REGISTRY
+
+    monkeypatch.setitem(
+        REGISTRY, "q_count_distinct",
+        dataclasses.replace(REGISTRY["q_count_distinct"], oracle="SELECT 1 AS wrong"),
+    )
+    assert main(["parity", "q_count_distinct", "--sf", "/root/testdata/sf0.001"]) == 1
+    out = capsys.readouterr().out
+    assert "FAIL q_count_distinct" in out and "0/1 pass" in out

@@ -10,7 +10,7 @@ echo "== pytest =="
 python -m pytest tests/ -q
 
 echo "== oracle parity sweep (sf0.01) =="
-python tools/parity_sweep.py /root/testdata/sf0.01
+python -m spark_fuse_spark.cli parity --sf /root/testdata/sf0.01 --threads 4
 
 echo "== bench (sf0.1) =="
 python bench.py

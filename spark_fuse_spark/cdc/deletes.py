@@ -15,6 +15,8 @@ substrate (`cdc/store.py`).
 
 Layout under ``target/``::
 
+    data/_schema.json               the table's schema (StructType JSON),
+                                    published with the data root
     data/seg-00000/                 append-only data segments
     data/seg-00001/
     data/_deletes/d-00002-<uuid>/   keys-only sidecars; the embedded number
@@ -38,16 +40,27 @@ delete sidecar at the CURRENT segment count and then appends the new
 segment — the sidecar kills old copies of the keys but not the rows it
 just wrote.
 
-Scale shape: ``mor_read`` reads every applicable sidecar in ONE scan,
-tagging each key with the sequence in its sidecar's directory name, and
-anti-joins each segment against the keys whose sequence exceeds the
-segment's index.  Sidecars are tiny next to the base, so Spark
-broadcasts them and each segment costs one scan with zero base shuffle;
-duplicate keys across sidecars need no ``distinct``, because an anti-join
-does not depend on them.  Segment count is bounded by compaction cadence
-(every read-side union member is one plan branch — compact when the
-manifest grows past tens of segments, exactly like any MOR table
-service).
+**Schema**: ``mor_write``/``mor_compact`` store the table's schema in
+the data root they publish, so reads pass it to the parquet reader and
+run no footer-inference job; sidecars are cast to the table's key types
+when written, so they are read with the key fields of the same schema.
+``mor_append`` and ``mor_upsert`` reject a batch whose columns or types
+differ from it, before they write anything.
+A table written before the schema was stored is read by inference until
+its next ``mor_write`` or ``mor_compact``.
+
+Scale shape: ``mor_read`` is ONE scan of every segment plus ONE
+broadcast left-anti join.  Each base row carries its segment index,
+parsed from its file path (``seg-<n>``); each delete key carries the
+sequence in its sidecar's directory name (``d-<seq>-<uuid>``), all
+sidecars read in one scan; a row is dropped when some key matches it
+with ``sequence > segment``.  Sidecars are tiny next to the base, so
+Spark broadcasts them and the base is never shuffled, and the plan does
+not grow with the segment count.  Duplicate keys need no ``distinct``:
+an anti-join does not depend on them.  Segment count is still bounded
+by compaction cadence (file listing and the per-row segment tag grow
+with it — compact when the table grows past tens of segments, like any
+MOR table service).
 """
 
 from __future__ import annotations
@@ -55,9 +68,13 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .store import column_types, conform_append, load_schema, read_parquet, staged_overwrite
 
 __all__ = [
     "mor_migrate_legacy_deletes",
@@ -151,28 +168,33 @@ def mor_write(df: DataFrame, target: str) -> None:
     would make every later read raise the legacy-layout error, and
     migrating them would apply the OLD table's deletes to the fresh
     seg-00000 — silently deleting freshly written rows."""
-    root = _data_root(target)
-    staged = f"{root}__staged_{uuid.uuid4().hex[:12]}"
-    df.write.mode("overwrite").parquet(os.path.join(staged, "seg-00000"))
-    if os.path.isdir(root):
-        retired = f"{root}__retired_{uuid.uuid4().hex[:12]}"
-        os.rename(root, retired)
-        os.rename(staged, root)
-        shutil.rmtree(retired)
-    else:
-        os.makedirs(os.path.dirname(root) or ".", exist_ok=True)
-        os.rename(staged, root)
+    staged_overwrite(df, _data_root(target), "seg-00000")
     legacy = os.path.join(target, _DELETES)
     if os.path.isdir(legacy):
         shutil.rmtree(legacy)
 
 
-def mor_append(df: DataFrame, target: str) -> str:
-    """Append one data segment; returns its path.  O(batch)."""
+def _conform(df: DataFrame, target: str) -> DataFrame:
+    """``df`` checked against the table's stored schema (``ValueError``
+    on a column it does not hold or a type it does not take; a narrower
+    integer or float is cast up — see ``store.conform_append``)."""
+    schema = load_schema(_data_root(target))
+    return conform_append(df, None if schema is None else column_types(schema), target)
+
+
+def _append_segment(df: DataFrame, target: str) -> str:
     idx = len(_segments(target))
     path = os.path.join(_data_root(target), f"seg-{idx:05d}")
     df.write.mode("errorifexists").parquet(path)
     return path
+
+
+def mor_append(df: DataFrame, target: str) -> str:
+    """Append one data segment; returns its path.  O(batch).  The batch
+    must have the table's columns and types; a narrower integer or float
+    column is cast up to the table's type, any other difference raises
+    ``ValueError`` (see ``store.conform_append``)."""
+    return _append_segment(_conform(df, target), target)
 
 
 def mor_delete(keys: DataFrame, target: str, key_cols: "list[str]") -> str:
@@ -181,51 +203,77 @@ def mor_delete(keys: DataFrame, target: str, key_cols: "list[str]") -> str:
     O(|keys|): no data segment is touched.  Applies to every segment
     that exists NOW (sequence = current segment count); segments
     appended later are unaffected.  Re-deleting absent keys is a no-op.
+    Keys are cast to the table's key types (a key the type cannot hold
+    becomes null and deletes nothing).
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     seq = len(_segments(target))
     path = os.path.join(_deletes_root(target), f"d-{seq:05d}-{uuid.uuid4().hex[:12]}")
-    keys.select(*key_cols).distinct().write.mode("errorifexists").parquet(path)
+    schema = load_schema(_data_root(target))
+    cols = [
+        F.col(k) if schema is None else F.col(k).try_cast(schema[k].dataType).alias(k)
+        for k in key_cols
+    ]
+    keys.select(*cols).write.mode("errorifexists").parquet(path)
     return path
 
 
 def mor_upsert(df: DataFrame, target: str, key_cols: "list[str]") -> str:
     """Merge-on-read upsert: delete the batch's keys from all EXISTING
     segments, then append the batch as a new segment — O(batch), never a
-    base rewrite.  The sequence rule keeps the new rows alive."""
+    base rewrite.  The sequence rule keeps the new rows alive.  The batch
+    is checked against the table's schema before anything is written, so
+    a refused batch leaves no sidecar behind to hide the live rows."""
+    df = _conform(df, target)
     mor_delete(df.select(*key_cols), target, key_cols)
-    return mor_append(df, target)
+    return _append_segment(df, target)
 
 
-def mor_read(spark: SparkSession, target: str, key_cols: "list[str]") -> DataFrame:
-    """The live view: each segment minus the delete keys that apply to it
-    (sidecars with sequence > segment index)."""
+def _dir_number(pattern: str) -> Column:
+    """The number in the directory ``pattern`` matches in each row's file
+    path, as int."""
+    return F.regexp_extract("_metadata.file_path", pattern, 1).cast("int")
+
+
+def _scan(spark: SparkSession, target: str) -> DataFrame:
+    """Every data segment in one scan, with the table's stored schema."""
     segs = _segments(target)
     if not segs:
         raise FileNotFoundError(f"no data segments under {target}")
-    # one read of every sidecar that applies to some segment; each key
-    # carries its sidecar's sequence, parsed from the d-<seq>-<uuid>
-    # directory in its file path
-    dels = [(s, p) for s, p in _delete_files(target) if s > 0]
-    if dels:
-        keys = spark.read.parquet(*[p for _, p in dels]).select(
-            *key_cols,
-            F.regexp_extract("_metadata.file_path", r"/d-(\d+)-[^/]*/[^/]*$", 1)
-            .cast("int")
-            .alias("__seq"),
-        )
-    parts = []
-    for i, seg in enumerate(segs):
-        base = spark.read.parquet(seg)
-        if any(s > i for s, _ in dels):
-            applicable = keys.where(F.col("__seq") > i).drop("__seq")
-            base = base.join(F.broadcast(applicable), key_cols, "left_anti")
-        parts.append(base)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    schema = load_schema(_data_root(target))
+    if schema is None:
+        # written before schemas were stored, when appends were unchecked:
+        # widen the segments' footer schemas as a union of them would
+        schema = reduce(DataFrame.unionByName, [spark.read.parquet(s) for s in segs]).schema
+    return spark.read.schema(schema).parquet(*segs)
+
+
+def _scan_keys(spark: SparkSession, target: str, paths: "list[str]",
+               key_cols: "list[str]") -> DataFrame:
+    """Every sidecar in ``paths`` in one scan, read with the key fields
+    of the table's stored schema (the types ``mor_delete`` cast to)."""
+    schema = load_schema(_data_root(target))
+    keys = None if schema is None else StructType([schema[k] for k in key_cols])
+    return read_parquet(spark, keys, *paths).select(*key_cols)
+
+
+def mor_read(spark: SparkSession, target: str, key_cols: "list[str]") -> DataFrame:
+    """The live view: every segment minus the delete keys that apply to
+    each row's segment (sidecars with sequence > segment index)."""
+    base = _scan(spark, target)
+    dels = [p for s, p in _delete_files(target) if s > 0]
+    if not dels:
+        return base
+    keys = _scan_keys(spark, target, dels, key_cols).select(
+        *[F.col(k).alias(f"__del_{k}") for k in key_cols],
+        _dir_number(r"/d-(\d+)-[^/]*/[^/]*$").alias("__seq"),
+    )
+    base = base.withColumn("__seg", _dir_number(r"/seg-(\d+)/[^/]*$"))
+    cond = F.col("__seq") > F.col("__seg")
+    for k in key_cols:
+        cond = cond & (base[k] == keys[f"__del_{k}"])
+    return base.join(F.broadcast(keys), cond, "left_anti").drop("__seg")
 
 
 def mor_compact(spark: SparkSession, target: str, key_cols: "list[str]") -> int:
@@ -238,14 +286,7 @@ def mor_compact(spark: SparkSession, target: str, key_cols: "list[str]") -> int:
     segs = _segments(target)
     if not dels and len(segs) <= 1:
         return 0
-    live = mor_read(spark, target, key_cols)
-    root = _data_root(target)
-    staged = f"{root}__staged_{uuid.uuid4().hex[:12]}"
-    live.write.mode("overwrite").parquet(os.path.join(staged, "seg-00000"))
-    retired = f"{root}__retired_{uuid.uuid4().hex[:12]}"
-    os.rename(root, retired)
-    os.rename(staged, root)
-    shutil.rmtree(retired)
+    staged_overwrite(mor_read(spark, target, key_cols), _data_root(target), "seg-00000")
     return len(dels)
 
 
@@ -253,10 +294,10 @@ def mor_stats(spark: SparkSession, target: str, key_cols: "list[str]") -> dict:
     """Audit panel: raw segment rows, distinct delete keys, live rows,
     segment and sidecar counts."""
     segs = _segments(target)
-    base = sum(spark.read.parquet(s).count() for s in segs)
+    base = _scan(spark, target).count()
     dels = _delete_files(target)
     deleted = (
-        spark.read.parquet(*[p for _, p in dels]).select(*key_cols).distinct().count()
+        _scan_keys(spark, target, [p for _, p in dels], key_cols).distinct().count()
         if dels
         else 0
     )

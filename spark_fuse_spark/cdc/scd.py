@@ -29,9 +29,13 @@ Scale notes (100 TB design):
 * the SCD2 per-sequence loop is driver-side but bounded by the maximum
   duplicate multiplicity of one batch (max_seq), not by data volume —
   same bound as the reference.
-* the multi-pass source is cached once per call (reference
-  ``:627-629,664-665``); one aggregate over it reads both the loop bound
-  and the null-key check.
+* with ``order_by`` the multi-pass source is cached once per call
+  (reference ``:627-629,664-665``); one aggregate over it reads both the
+  loop bound and the null-key check.  Without ``order_by`` there is a
+  single mini-batch and no aggregate: the deduped batch is checkpointed
+  lazily, one top-1 job over it answers "is it empty?" and "has it a
+  null key?" while it evaluates the source (once) and keeps the rows,
+  and the write query reads the kept rows.
 """
 
 from __future__ import annotations
@@ -118,19 +122,24 @@ def _null_key_predicate(business_keys: Sequence[str]) -> Column:
     return pred
 
 
-def _apply_null_key_policy(
-    df: DataFrame, business_keys: Sequence[str], policy: str
-) -> DataFrame:
+def _on_null_keys(df: DataFrame, business_keys: Sequence[str], policy: str) -> DataFrame:
+    """Apply the null-key policy to a frame known to hold a null key."""
     if policy == "allow":
-        return df
-    has_null = df.where(_null_key_predicate(business_keys)).limit(1).count() > 0
-    if not has_null:
         return df
     if policy == "error":
         raise ValueError(f"null business key values present in {business_keys}")
     if policy == "drop":
         return df.where(~_null_key_predicate(business_keys))
     raise ValueError(f"unknown null-key policy {policy!r}")
+
+
+def _apply_null_key_policy(
+    df: DataFrame, business_keys: Sequence[str], policy: str
+) -> DataFrame:
+    if policy == "allow":
+        return df
+    has_null = df.where(_null_key_predicate(business_keys)).limit(1).count() > 0
+    return _on_null_keys(df, business_keys, policy) if has_null else df
 
 
 def _hash_columns(df: DataFrame, business_keys: Sequence[str],
@@ -320,32 +329,43 @@ def track_history_upsert(
     """
     store = store or get_store()
     _validate_keys(source, business_keys)
+    tracked = _hash_columns(source, business_keys, exclude_columns)
+    null_key = _null_key_predicate(business_keys)
 
-    # Null keys form their own dedup/sequence groups, so the null-key
-    # policy can run on the sequenced rows: one aggregate over the cached
-    # source reads the loop bound and the null-key check together.
+    def stamped(df: DataFrame) -> DataFrame:
+        return df.withColumn(HASH_COL, row_hash(tracked)).withColumn(
+            LOAD_TS_COL, _load_ts(load_ts_expr)
+        )
+
     if order_by is None:
-        src = _dedup_keep_latest(source, business_keys, None).withColumn(_SEQ_COL, F.lit(1))
-    else:
-        w = Window.partitionBy(*business_keys).orderBy(F.col(order_by).asc_nulls_first())
-        src = source.withColumn(_SEQ_COL, F.row_number().over(w))
+        # One mini-batch, checkpointed lazily: the top-1 probe below
+        # (TakeOrderedAndProject, one job) evaluates the source once and
+        # keeps the rows, and the write query reads those rows, so both
+        # see one set of rows and one load_ts.  Null keys form their own
+        # dedup groups, so the policy applies to the deduped rows.
+        batch = stamped(_dedup_keep_latest(source, business_keys, None)).localCheckpoint(
+            eager=False
+        )
+        probe = batch.select(null_key.alias("k")).orderBy(F.desc("k")).limit(1).collect()
+        if not probe:
+            return
+        if probe[0][0]:
+            batch = _on_null_keys(batch, business_keys, null_key_policy)
+        _apply_scd2_batch(spark, batch, target, business_keys, store)
+        return
 
-    tracked = _hash_columns(src, business_keys, exclude_columns)
-    cached = src.withColumn(HASH_COL, row_hash(tracked)).withColumn(
-        LOAD_TS_COL, _load_ts(load_ts_expr)
-    ).cache()  # multi-pass: the aggregate + one pass per sequence rank
-    try:
-        null_key = _null_key_predicate(business_keys)
+    # Null keys form their own sequence groups, so the null-key policy can
+    # run on the sequenced rows: one aggregate over the cached source reads
+    # the loop bound and the null-key check together.
+    w = Window.partitionBy(*business_keys).orderBy(F.col(order_by).asc_nulls_first())
+    cached = stamped(source.withColumn(_SEQ_COL, F.row_number().over(w))).cache()
+    try:  # multi-pass: the aggregate + one pass per sequence rank
         max_seq, max_seq_keyed, has_null = cached.agg(
             F.max(_SEQ_COL), F.max(F.when(~null_key, F.col(_SEQ_COL))), F.max(null_key)
         ).first()
         src = cached
         if has_null and null_key_policy != "allow":
-            if null_key_policy == "error":
-                raise ValueError(f"null business key values present in {business_keys}")
-            if null_key_policy != "drop":
-                raise ValueError(f"unknown null-key policy {null_key_policy!r}")
-            src, max_seq = cached.where(~null_key), max_seq_keyed
+            src, max_seq = _on_null_keys(cached, business_keys, null_key_policy), max_seq_keyed
         for seq in range(1, (max_seq or 0) + 1):
             batch = src.where(F.col(_SEQ_COL) == seq).drop(_SEQ_COL)
             _apply_scd2_batch(spark, batch, target, business_keys, store)
@@ -383,12 +403,13 @@ def _apply_scd2_batch(
     w = Window.partitionBy(*business_keys)
     cur_hash = F.max(F.when(~is_new & F.col(CURRENT_COL), F.col(HASH_COL))).over(w)
     new_hash = F.max(F.when(is_new, F.col(HASH_COL))).over(w)
-    # The close timestamp is the BATCH's materialized load_ts (carried
-    # from the cached source rows), not a freshly evaluated expression:
-    # with the default current_timestamp() a re-evaluation would land
-    # after the successor's effective_start, leaving overlapping validity
-    # intervals — end_ts of the old version must equal start_ts of the
-    # new one (the Delta path uses s.load_ts the same way).
+    # The close timestamp is the batch rows' load_ts, read in this same
+    # query as the successor's effective_start, not a separately
+    # evaluated expression: with the default current_timestamp() a
+    # re-evaluation would land after the successor's effective_start,
+    # leaving overlapping validity intervals — end_ts of the old version
+    # must equal start_ts of the new one (the Delta path uses s.load_ts
+    # the same way).
     close_ts = F.max(F.when(is_new, F.col(LOAD_TS_COL))).over(w)
     # prior max version per key over the FULL history (reference J2/A1,
     # change_tracking.py:348-354)
@@ -430,7 +451,13 @@ def _delta_scd2_batch(
     ``change_tracking.py:318-366``): (1) MERGE closes changed current
     rows (file-pruned); (2) left-join-isNull against the re-read current
     set finds new/changed rows; (3) grouped-max version join; (4) append.
-    Returns False on non-Delta stores."""
+    Returns False on non-Delta stores.
+
+    The MERGE and the append are two queries over the batch, so the
+    caller passes a materialized batch (``track_history_upsert`` reads
+    it from its cache or its checkpoint): both must see the same
+    ``load_ts``, or the closed version's ``end_ts`` would not equal its
+    successor's ``start_ts``."""
     from spark_fuse_spark.cdc.store import DeltaStore
 
     if not isinstance(store, DeltaStore):

@@ -36,7 +36,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .store import TableStore
+from .store import TableStore, column_types, conform_append
 
 __all__ = ["VersionedParquetStore"]
 
@@ -149,43 +149,21 @@ class VersionedParquetStore(TableStore):
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(*paths)
 
-    @staticmethod
-    def _schema_list(df: DataFrame) -> "list[list[str]]":
-        return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
-
     def append(self, df: DataFrame, target: str, merge_schema: bool = False) -> None:
-        """Append one segment.  If the table already has a schema and the
-        batch's differs, this fails LOUDLY unless ``merge_schema=True``
-        (evolution: new columns null-fill on old segments at read time;
-        silent column loss is the failure mode this guards)."""
+        """Append one segment.  The batch is checked against the table's
+        schema by ``conform_append`` (the parquet stores' one rule): a
+        batch that adds or drops columns fails LOUDLY unless
+        ``merge_schema=True`` (evolution: new columns null-fill on old
+        segments at read time; silent column loss is the failure mode this
+        guards), and a column that changes type fails even then."""
         prev = self.latest_version(target)
         prev_manifest = self._manifest(target, prev) if prev else None
         segments = prev_manifest["segments"] if prev_manifest else []
-        new_schema = self._schema_list(df)
         evolved = bool(prev_manifest and prev_manifest.get("evolved"))
         prev_schema = prev_manifest.get("schema") if prev_manifest else None
+        df = conform_append(df, prev_schema, target, merge_schema)
+        new_schema = column_types(df.schema)
         if prev_schema is not None and prev_schema != new_schema:
-            if not merge_schema:
-                raise ValueError(
-                    f"append schema {new_schema} differs from table schema "
-                    f"{prev_schema} at {target}; pass merge_schema=True to evolve"
-                )
-            prev_types = {name: typ for name, typ in prev_schema}
-            conflicts = [
-                (name, prev_types[name], typ)
-                for name, typ in new_schema
-                if name in prev_types and prev_types[name] != typ
-            ]
-            if conflicts:
-                # a (name, type) union would commit two entries for the same
-                # column and only fail later as an opaque mergeSchema parquet
-                # error at read time — reject type evolution up front
-                detail = ", ".join(f"{n}: {a} -> {b}" for n, a, b in conflicts)
-                raise ValueError(
-                    f"type evolution unsupported at {target}: column(s) would "
-                    f"change type ({detail}); cast the batch to the table "
-                    "schema before appending"
-                )
             evolved = True
             # committed schema = union in first-seen column order
             seen = {tuple(c) for c in prev_schema}
@@ -195,7 +173,7 @@ class VersionedParquetStore(TableStore):
 
     def overwrite(self, df: DataFrame, target: str) -> None:
         seg = self._write_segment(df, target)
-        self._commit(target, [seg], "overwrite", schema=self._schema_list(df))
+        self._commit(target, [seg], "overwrite", schema=column_types(df.schema))
 
     # ------------------------------------------------- travel/maintenance
     def rollback(self, target: str, version: int) -> int:

@@ -195,6 +195,19 @@ def test_scd2_unknown_null_key_policy_raises_only_on_null_keys(spark, tmp_path):
         )
 
 
+def test_scd2_empty_batch_writes_nothing(spark, tmp_path):
+    target = str(tmp_path / "h8")
+    empty = _rows(spark, [(1, "ann", "berlin")]).limit(0)
+    track_history_upsert(spark, empty, target, ["id"], load_ts_expr=TS1)
+    assert not (tmp_path / "h8").exists()
+    track_history_upsert(
+        spark, _rows(spark, [(1, "ann", "berlin")]), target, ["id"], load_ts_expr=TS1
+    )
+    before = sorted(p.name for p in (tmp_path / "h8").iterdir())
+    track_history_upsert(spark, empty, target, ["id"], load_ts_expr=TS2)
+    assert sorted(p.name for p in (tmp_path / "h8").iterdir()) == before
+
+
 # ------------------------------------------------------- dispatch / builder
 
 

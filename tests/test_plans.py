@@ -492,9 +492,11 @@ def test_plan_contract(spark, sf_small, name):
 # test tier, AQE query-stage jobs included.  At small scale a job's fixed
 # cost outweighs its data work, so these budgets are performance contracts.
 JOB_BUDGETS = {
-    "c_mor_upsert_read": 13,
-    "c_scd2_point_in_time": 21,
-    "c_scd2_temporal_join": 23,
+    "c_mor_delete_read": 9,
+    "c_mor_upsert_read": 9,
+    "c_scd2_point_in_time": 16,
+    "c_scd2_temporal_join": 18,
+    "c_scd2_two_batch": 12,
     "d_containment": 17,
     "d_dedup_clusters": 31,
     "d_lsh_recall_audit": 20,

@@ -101,7 +101,7 @@ ORDER BY c_custkey
     "load_ts. cdc/scd.py current_only_upsert end-to-end.",
 )
 def c_scd1_two_batch(spark: SparkSession, sf: str) -> DataFrame:
-    from ..cdc import current_only_upsert
+    from ..cdc import current_only_upsert, get_store
 
     customer = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     batch1 = customer.withColumnRenamed("c_mktsegment", "segment")
@@ -119,7 +119,7 @@ def c_scd1_two_batch(spark: SparkSession, sf: str) -> DataFrame:
         load_ts_expr="to_timestamp('2024-02-01 00:00:00')",
     )
     return (
-        spark.read.parquet(target)
+        get_store().read(spark, target)
         .select(
             "c_custkey",
             "segment",
@@ -156,7 +156,7 @@ ORDER BY c_custkey, version
     "track_history_upsert end-to-end.",
 )
 def c_scd2_two_batch(spark: SparkSession, sf: str) -> DataFrame:
-    from ..cdc import track_history_upsert
+    from ..cdc import get_store, track_history_upsert
 
     customer = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     batch1 = customer.withColumnRenamed("c_mktsegment", "segment")
@@ -174,7 +174,7 @@ def c_scd2_two_batch(spark: SparkSession, sf: str) -> DataFrame:
         load_ts_expr="to_timestamp('2024-02-01 00:00:00')",
     )
     return (
-        spark.read.parquet(target)
+        get_store().read(spark, target)
         .select(
             "c_custkey",
             "segment",
@@ -209,7 +209,7 @@ ORDER BY c_custkey
     "overlapping T.",
 )
 def c_scd2_pit(spark: SparkSession, sf: str) -> DataFrame:
-    from ..cdc import track_history_upsert
+    from ..cdc import get_store, track_history_upsert
 
     customer = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     batch1 = customer.withColumnRenamed("c_mktsegment", "segment")
@@ -232,7 +232,7 @@ def c_scd2_pit(spark: SparkSession, sf: str) -> DataFrame:
             load_ts_expr=f"to_timestamp('{ts}')",
         )
     asof = F.to_timestamp(F.lit("2024-02-15 00:00:00"))
-    hist = spark.read.parquet(target)
+    hist = get_store().read(spark, target)
     return (
         hist.where(
             (F.col("effective_start_ts") <= asof)
@@ -372,7 +372,7 @@ ORDER BY o_orderkey
     "rides along as a join residual); history side is dim-sized.",
 )
 def c_scd2_temporal(spark: SparkSession, sf: str) -> DataFrame:
-    from ..cdc import track_history_upsert
+    from ..cdc import get_store, track_history_upsert
 
     customer = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     batch1 = customer.withColumnRenamed("c_mktsegment", "segment")
@@ -402,7 +402,7 @@ def c_scd2_temporal(spark: SparkSession, sf: str) -> DataFrame:
             " + make_dt_interval(CAST(o_orderkey % 90 AS INT), 0, 0, 0)"
         ).alias("fact_ts"),
     )
-    hist = spark.read.parquet(target)
+    hist = get_store().read(spark, target)
     return (
         facts.join(
             hist,

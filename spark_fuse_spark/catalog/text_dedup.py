@@ -1063,15 +1063,12 @@ FROM nx CROSS JOIN nc CROSS JOIN tp
     "audit adds only count aggregates.",
 )
 def d_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     from ..operators.dedup import (
         _band_candidates,
-        _exploded_shingles,
+        _checkpointed_sets,
         _jaccard_prefix_candidates,
         _minhash_mins,
         _shared_shingles,
-        _shingle_sets,
     )
 
     docs = load_table(spark, sf, "documents")
@@ -1086,11 +1083,7 @@ def d_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
     #                       (the verify keeps pairs sharing >= 1 shingle)
     #   n_true_positives  = __b = 1 AND jaccard >= 0.5.
     # The comparisons run on the UNROUNDED shared/(na+nb-shared).
-    e = _exploded_shingles(docs, "text", "doc_id", 3).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # the sets feed the prefix self-join and both verify legs
-    sets = _shingle_sets(e).persist(StorageLevel.MEMORY_AND_DISK)
+    e, sets = _checkpointed_sets(docs, "text", "doc_id", 3)
     banded = _band_candidates(_minhash_mins(e, 32, 42), 32, 8)
     union_cands = (
         _jaccard_prefix_candidates(sets, 0.5)
@@ -1107,9 +1100,7 @@ def d_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
         F.coalesce(
             F.sum(F.when((F.col("__b") == 1) & (jac >= 0.5), 1)), F.lit(0)
         ).cast("long").alias("n_true_positives"),
-    ).localCheckpoint(eager=True)  # 1 row; releases the persisted inputs eagerly
-    e.unpersist()
-    sets.unpersist()
+    )
     return counts.select(
         "n_exact_pairs",
         "n_candidate_pairs",

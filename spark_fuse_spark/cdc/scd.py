@@ -20,7 +20,10 @@ Semantics preserved from the reference
 Scale notes (100 TB design):
 
 * SCD1 compares by key-equi joins → shuffles on business keys; AQE
-  skew-join handles hot keys.
+  skew-join handles hot keys.  Its deduped batch is probed the same
+  way as a single SCD2 mini-batch (below): one top-1 job answers the
+  empty-batch and null-key questions, and an empty batch writes
+  nothing.
 * an SCD2 mini-batch on the parquet backend rewrites the whole table
   anyway (see ``store.py``), so it is resolved in ONE window keyed on
   the business keys over history ∪ batch: one shuffle of the table, no
@@ -133,13 +136,21 @@ def _on_null_keys(df: DataFrame, business_keys: Sequence[str], policy: str) -> D
     raise ValueError(f"unknown null-key policy {policy!r}")
 
 
-def _apply_null_key_policy(
-    df: DataFrame, business_keys: Sequence[str], policy: str
-) -> DataFrame:
-    if policy == "allow":
-        return df
-    has_null = df.where(_null_key_predicate(business_keys)).limit(1).count() > 0
-    return _on_null_keys(df, business_keys, policy) if has_null else df
+def _probed_batch(
+    batch: DataFrame, business_keys: Sequence[str], policy: str
+) -> "DataFrame | None":
+    """``batch`` checkpointed lazily with the null-key policy applied, or
+    ``None`` when it is empty.  One top-1 probe (TakeOrderedAndProject,
+    one job) over the null-key flag answers both questions, evaluates the
+    batch once and keeps its rows, so the write that follows reads the
+    rows the probe saw (one set of rows, one load_ts).  Null keys form
+    their own dedup groups, so the policy may run on deduped rows."""
+    batch = batch.localCheckpoint(eager=False)
+    null_key = _null_key_predicate(business_keys)
+    probe = batch.select(null_key.alias("k")).orderBy(F.desc("k")).limit(1).collect()
+    if not probe:
+        return None
+    return _on_null_keys(batch, business_keys, policy) if probe[0][0] else batch
 
 
 def _hash_columns(df: DataFrame, business_keys: Sequence[str],
@@ -195,15 +206,19 @@ def current_only_upsert(
     Update a target row only when the row hash differs (so unchanged rows
     keep their original ``load_ts`` — reference ``whenMatchedUpdate``
     condition, ``change_tracking.py:466-472,490-493``); insert new keys.
+    An empty batch writes nothing, not even an empty first target.
     """
     store = store or get_store()
     _validate_keys(source, business_keys)
-    src = _apply_null_key_policy(source, business_keys, null_key_policy)
-    src = _dedup_keep_latest(src, business_keys, order_by)
+    src = _dedup_keep_latest(source, business_keys, order_by)
     tracked = _hash_columns(src, business_keys, exclude_columns)
-    src = src.withColumn(HASH_COL, row_hash(tracked)).withColumn(
-        LOAD_TS_COL, _load_ts(load_ts_expr)
+    src = _probed_batch(
+        src.withColumn(HASH_COL, row_hash(tracked)).withColumn(LOAD_TS_COL, _load_ts(load_ts_expr)),
+        business_keys,
+        null_key_policy,
     )
+    if src is None:  # an empty batch changes nothing
+        return
 
     if not store.exists(spark, target):
         store.overwrite(src, target)
@@ -338,20 +353,14 @@ def track_history_upsert(
         )
 
     if order_by is None:
-        # One mini-batch, checkpointed lazily: the top-1 probe below
-        # (TakeOrderedAndProject, one job) evaluates the source once and
-        # keeps the rows, and the write query reads those rows, so both
-        # see one set of rows and one load_ts.  Null keys form their own
-        # dedup groups, so the policy applies to the deduped rows.
-        batch = stamped(_dedup_keep_latest(source, business_keys, None)).localCheckpoint(
-            eager=False
+        # one mini-batch, probed once for emptiness and null keys
+        batch = _probed_batch(
+            stamped(_dedup_keep_latest(source, business_keys, None)),
+            business_keys,
+            null_key_policy,
         )
-        probe = batch.select(null_key.alias("k")).orderBy(F.desc("k")).limit(1).collect()
-        if not probe:
-            return
-        if probe[0][0]:
-            batch = _on_null_keys(batch, business_keys, null_key_policy)
-        _apply_scd2_batch(spark, batch, target, business_keys, store)
+        if batch is not None:
+            _apply_scd2_batch(spark, batch, target, business_keys, store)
         return
 
     # Null keys form their own sequence groups, so the null-key policy can

@@ -38,9 +38,8 @@ Catalyst expressions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.hashing import minhash_permutations, portable_hash64  # noqa: F401
 from ..functions.text import doc_fingerprint, word_shingles
@@ -82,14 +81,20 @@ def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> Dat
     Shingles are hashed to 60-bit ints *before* the explode+shuffle so the
     join key is 8 bytes, not a k-word string.
     """
-    sh = df.select(
-        F.col(id_col).alias("__id"), word_shingles(text_col, k).alias("__sh")
-    ).filter(F.size("__sh") > 0)
-    # hash AFTER the explode: md5 then runs in WholeStageCodegen on flat
-    # rows instead of inside an interpreted higher-order transform
-    return sh.select(
-        "__id", F.size("__sh").alias("__n"), F.explode("__sh").alias("__s")
-    ).select("__id", "__n", portable_hash64("__s").alias("__h"))
+    sh = df.select(F.col(id_col).alias("__id"), word_shingles(text_col, k).alias("__sh"))
+    # explode_outer, then drop the null rows it emits for empty and null
+    # arrays: a plain explode (or a size filter on __sh) makes Spark add
+    # ``size(__sh) > 0`` below the projection, which copies the whole
+    # tokenize+shingle tree into the filter, so each document would pay
+    # for it three times.  Shingles are never null (concat_ws), so the
+    # filter drops exactly the empty documents.  Hash AFTER the explode:
+    # md5 then runs in WholeStageCodegen on flat rows instead of inside
+    # an interpreted higher-order transform.
+    return (
+        sh.select("__id", F.size("__sh").alias("__n"), F.explode_outer("__sh").alias("__s"))
+        .where(F.col("__s").isNotNull())
+        .select("__id", "__n", portable_hash64("__s").alias("__h"))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -254,15 +259,11 @@ def _containment_prefix_pairs(
     to the join; the other side contributes its full index."""
     # the exploded frame feeds the set build AND the candidate join's
     # full-index side; the sets feed the prefix and both verify legs
-    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
-    sets = _shingle_sets(e).persist(StorageLevel.MEMORY_AND_DISK)
+    e, sets = _checkpointed_sets(df, text_col, id_col, k)
     candidates = _containment_prefix_candidates(e, sets, threshold)
-    out = _containment_rows(_shared_shingles(candidates, sets), threshold).localCheckpoint(
+    return _containment_rows(_shared_shingles(candidates, sets), threshold).localCheckpoint(
         eager=True
     )
-    sets.unpersist()
-    e.unpersist()
-    return out
 
 
 def _containment_prefix_candidates(
@@ -412,16 +413,13 @@ def minhash_lsh_pairs(
     verify is two id-keyed joins over O(candidates) rows.
     """
     # the exploded shingles feed the signature aggregate AND the set
-    # build; without a persist Spark recomputes the tokenize+md5 subtree
-    # once per consumer (measured 4× at sf0.1)
-    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    # build; unshared, Spark recomputes the tokenize+md5 subtree once per
+    # consumer (measured 4× at sf0.1).  A lazy checkpoint builds it once,
+    # inside the one query that reads it twice.
+    e = _exploded_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
     candidates = _band_candidates(_minhash_mins(e, num_hashes, seed), num_hashes, bands)
-    # materialize (lineage-truncated) so the persisted input can be
-    # released eagerly instead of leaking for the session lifetime
     out = _jaccard_rows(_shared_shingles(candidates, _unordered_sets(e)), threshold)
-    out = out.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    return out.localCheckpoint(eager=True)
 
 
 def simhash_signatures(
@@ -727,6 +725,20 @@ def jaccard_prefix_pairs(
     from a self-join over the RARE end of the frequency spectrum, and
     a ``t·|A| ≤ |B| ≤ |A|/t`` length filter prunes further.
 
+    Overlap bound: a pair whose prefixes share ``c`` shingles stays a
+    candidate only if ``c + max(ceil(t·na), ceil(t·nb)) - 1 ≥
+    t·(na+nb)/(1+t)``.  Exact: in the rarest-first order, take the set
+    whose last prefix shingle ranks lower; every shared shingle ranked
+    at or below it lies in both prefixes (counted by ``c``), and every
+    other one lies in that set's suffix, which holds ``ceil(t·n) - 1``
+    shingles — so the overlap is at most the left side, while Jaccard ≥
+    t needs an overlap ≥ t·(na+nb)/(1+t).  It drops most pairs that
+    meet on one rare shingle and little else; ``c`` is counted by the
+    aggregate that collapses the join rows to pairs, so it adds no
+    exchange.
+    Every integer bound derived from t is computed on the safe side
+    (:func:`_ceil_t`), so float rounding never drops a boundary pair.
+
     Plan: one global document-frequency aggregate, then ONE per-document
     table ``(__id, __n, __hs)`` (:func:`_shingle_sets`) that serves both
     stages — the prefix is a ``slice`` of the sorted set, and each
@@ -738,19 +750,25 @@ def jaccard_prefix_pairs(
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")
-    # the exploded frame feeds the frequency aggregate AND the set build
-    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
-    # the sets feed the prefix self-join and both verify legs
-    sets = _shingle_sets(e).persist(StorageLevel.MEMORY_AND_DISK)
+    _, sets = _checkpointed_sets(df, text_col, id_col, k)
     result = _jaccard_rows(
         _shared_shingles(_jaccard_prefix_candidates(sets, threshold), sets), threshold
     )
-    # materialize (lineage-truncated) so the persisted inputs can be
-    # released eagerly instead of leaking for the session lifetime
-    out = result.localCheckpoint(eager=True)
-    sets.unpersist()
-    e.unpersist()
-    return out
+    return result.localCheckpoint(eager=True)
+
+
+def _checkpointed_sets(
+    df: DataFrame, text_col: str, id_col: str, k: int
+) -> "tuple[DataFrame, DataFrame]":
+    """The exploded shingles and their :func:`_shingle_sets` table, each
+    built once: the exploded frame is checkpointed lazily (its two reads,
+    the frequency aggregate and the set build, run in the one job that
+    builds the sets) and the sets eagerly (they feed the prefix join and
+    both verify legs).  A persisted frame would instead run one
+    cache-building job per reference that AQE plans before the cache
+    exists."""
+    e = _exploded_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
+    return e, _shingle_sets(e).localCheckpoint(eager=True)
 
 
 def _shingle_sets(e: DataFrame) -> DataFrame:
@@ -769,19 +787,33 @@ def _shingle_sets(e: DataFrame) -> DataFrame:
     )
 
 
+# slack for the integer bounds derived from a float threshold: t·n is
+# computed in doubles (0.55·100 = 55.00000000000001), so each bound is
+# rounded toward keeping the pair
+_EPS = 1e-9
+
+
+def _ceil_t(threshold: float, n: Column) -> Column:
+    """``ceil(t·n)`` on the safe side: never one above the true value."""
+    return F.ceil(threshold * n - _EPS)
+
+
 def _prefix_rows(sets: DataFrame, threshold: float) -> DataFrame:
     """``(__id, __n, __h)`` for each document's rarest
     ``n - ceil(t·n) + 1`` shingles, read off :func:`_shingle_sets`."""
-    plen = (F.col("__n") - F.ceil(threshold * F.col("__n")) + 1).cast("int")
+    plen = (F.col("__n") - _ceil_t(threshold, F.col("__n")) + 1).cast("int")
     return sets.select("__id", "__n", F.explode(F.slice("__hs", 1, plen)).alias("__h"))
 
 
 def _jaccard_prefix_candidates(sets: DataFrame, threshold: float) -> DataFrame:
-    """Candidate (id_a, id_b) pairs whose prefixes intersect and whose
-    sizes satisfy the Jaccard length filter — a superset of all pairs
-    with Jaccard ≥ threshold, with join volume Σ_h pf(h)² (prefix
-    occurrences only), never the plain index's Σ_h df(h)².  ``sets`` is
-    the :func:`_shingle_sets` table."""
+    """Candidate (id_a, id_b) pairs whose prefixes intersect, whose sizes
+    satisfy the Jaccard length filter, and whose prefix overlap ``c``
+    passes the overlap bound ``c + max(ceil(t·na), ceil(t·nb)) - 1 ≥
+    t·(na+nb)/(1+t)`` — a superset of all pairs with Jaccard ≥
+    threshold (see :func:`jaccard_prefix_pairs` for why the bound is
+    exact), with join volume Σ_h pf(h)² (prefix occurrences only),
+    never the plain index's Σ_h df(h)².  ``sets`` is the
+    :func:`_shingle_sets` table."""
     prefix = _prefix_rows(sets, threshold)
     pa = prefix.select(
         F.col("__id").alias("id_a"), F.col("__n").alias("na"), "__h"
@@ -789,16 +821,20 @@ def _jaccard_prefix_candidates(sets: DataFrame, threshold: float) -> DataFrame:
     pb = prefix.select(
         F.col("__id").alias("id_b"), F.col("__n").alias("nb"), "__h"
     )
+    na, nb = F.col("na"), F.col("nb")
+    suffix = F.greatest(_ceil_t(threshold, na), _ceil_t(threshold, nb)) - 1
     return (
         pa.join(pb, "__h")
         .where(
             (F.col("id_a") < F.col("id_b"))
             # length filter: jaccard >= t forces t*na <= nb <= na/t
-            & (F.col("nb") >= F.ceil(threshold * F.col("na")))
-            & (F.col("nb") <= F.floor(F.col("na") / threshold))
+            & (nb >= _ceil_t(threshold, na))
+            & (nb <= F.floor(na / threshold + _EPS))
         )
+        .groupBy("id_a", "id_b", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .where(F.col("__c") + suffix >= threshold * (na + nb) / (1 + threshold) - _EPS)
         .select("id_a", "id_b")
-        .distinct()
     )
 
 
@@ -828,7 +864,7 @@ def incremental_minhash_pairs(
     exactly the base pipeline's result minus the old×old block
     (differentially tested against that identity).
     """
-    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    e = _exploded_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
     cand = _band_candidates(_minhash_mins(e, num_hashes, seed), num_hashes, bands)
     flags = df.select(F.col(id_col).alias("__fid"), F.col(is_new_col).alias("__new"))
     fa = flags.withColumnRenamed("__fid", "__fa").withColumnRenamed("__new", "__na")
@@ -840,9 +876,7 @@ def incremental_minhash_pairs(
         .select("id_a", "id_b")
     )
     out = _jaccard_rows(_shared_shingles(touching, _unordered_sets(e)), threshold)
-    out = out.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    return out.localCheckpoint(eager=True)
 
 
 def bbit_minhash_pairs(
@@ -871,17 +905,17 @@ def bbit_minhash_pairs(
     shape to minhash_lsh_pairs — O(docs x bands) band shuffle, verify
     confined to candidates.
     """
-    e = _exploded_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    e = _exploded_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
     # b-bit keeps the low bits OF THE MINIMUM, so the min is taken over
     # the full permuted values: `min(p) % 4`, never `min(p % 4)`.
     # three consumers (band explode + both sides of the estimate join)
-    # and no exchange reuse across alias-renamed legs: persist so the
+    # and no exchange reuse across alias-renamed legs: checkpoint so the
     # 30-permutation min-aggregation over the exploded shingles runs
-    # once, not three times
+    # once, not three times (lazily: all three read it in one query)
     sigs = (
         _minhash_mins(e, num_hashes, seed)
         .select("__id", *[(F.col(f"__m{i}") % 4).alias(f"__m{i}") for i in range(num_hashes)])
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     cand = _band_candidates(sigs, num_hashes, bands)
     # exact Jaccard first, so the b-bit estimate is only computed for the
@@ -902,15 +936,12 @@ def bbit_minhash_pairs(
         F.lit(0.0),
         (agree.cast("double") / num_hashes - 0.25) / 0.75,
     )
-    out = (
+    return (
         exact.join(sa, "id_a")
         .join(sb, "id_b")
         .select("id_a", "id_b", F.round(est, 6).alias("bbit_estimate"), "jaccard")
         .localCheckpoint(eager=True)
     )
-    sigs.unpersist()
-    e.unpersist()
-    return out
 
 
 # ------------------------------------------------------------- winnowing
@@ -1006,17 +1037,14 @@ def winnowing_pairs(
     """
     # the md5-per-k-gram fingerprint pass is the expensive subtree and
     # feeds the df-cap aggregate, the size aggregate AND both legs of the
-    # self-join — persist it (and the capped set) so it runs ONCE, the
-    # same discipline as minhash_lsh_pairs
-    fps = winnowing_fingerprints(df, text_col, id_col, k, w).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # self-join — checkpoint it (and the capped set) lazily so it runs
+    # ONCE inside the one query below, the same discipline as
+    # minhash_lsh_pairs
+    fps = winnowing_fingerprints(df, text_col, id_col, k, w).localCheckpoint(eager=False)
     rare = fps.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("__df")).where(
         F.col("__df") <= max_df
     )
-    kept = fps.join(rare.select("fingerprint"), "fingerprint").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    kept = fps.join(rare.select("fingerprint"), "fingerprint").localCheckpoint(eager=False)
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
     e = kept.join(sizes, id_col)
     a = e.select(
@@ -1033,9 +1061,6 @@ def winnowing_pairs(
         .filter(F.col("shared") >= min_shared)
     )
     jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    out = shared.select(
+    return shared.select(
         "id_a", "id_b", "shared", F.round(jac, 6).alias("jaccard")
     ).localCheckpoint(eager=True)
-    fps.unpersist()
-    kept.unpersist()
-    return out

@@ -189,16 +189,21 @@ def connected_components(
     therefore the ones a further round would produce, and the
     confirmation round an edge-set diff needs is skipped — dedup graphs
     (small, dense components) become stars in round 1.
+
+    Round-0 edges may repeat: the input pairs are only directed high→low,
+    not deduplicated.  Large-star is a group-min and a join probe, both
+    blind to multiplicity, and round 1's small-star ``distinct`` is the
+    first edge-set collapse, so a ``distinct`` at entry would only add
+    an exchange.
     """
-    # normalize high→low at entry so the per-round boundary invariant is
-    # "directed (u > v), deduped" from round 0: _symmetrize regenerates
-    # both directions anyway, so the symmetric graph is identical
+    # normalize high→low at entry so every round boundary holds directed
+    # (u > v) edges: _symmetrize regenerates both directions anyway, so
+    # the symmetric graph is identical
     a = F.col(id_a).cast("long")
     b = F.col(id_b).cast("long")
     edges = _round_checkpoint(
         pairs.select(F.greatest(a, b).alias("u"), F.least(a, b).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct(),
+        .where(F.col("u") != F.col("v")),
         checkpoint_dir,
     )
     converged = False
@@ -235,8 +240,9 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    # at fixpoint every edge points node → component-min; roots label themselves
-    roots = edges.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
+    # at fixpoint every edge points node → component-min; roots label
+    # themselves (repeated root rows collapse in the groupBy)
+    roots = edges.select(F.col("v").alias("node"), F.col("v").alias("component"))
     return (
         edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
         .union(roots)

@@ -73,6 +73,18 @@ def test_scd1_null_key_policies(spark, tmp_path):
     assert len(_read(spark, target)) == 1
 
 
+def test_scd1_empty_batch_writes_nothing(spark, tmp_path):
+    target = str(tmp_path / "t5")
+    empty = _rows(spark, [(1, "ann", "berlin")]).limit(0)
+    current_only_upsert(spark, empty, target, ["id"], load_ts_expr=TS1)
+    assert not (tmp_path / "t5").exists()
+    current_only_upsert(spark, _rows(spark, [(1, "ann", "berlin")]), target, ["id"], load_ts_expr=TS1)
+    before = sorted(p.name for p in (tmp_path / "t5").iterdir())
+    current_only_upsert(spark, empty, target, ["id"], load_ts_expr=TS2)
+    assert sorted(p.name for p in (tmp_path / "t5").iterdir()) == before
+    assert len(_read(spark, target)) == 1
+
+
 # ---------------------------------------------------------------- SCD2
 
 

@@ -322,6 +322,94 @@ def test_jaccard_prefix_identical_to_plain_inverted_index(spark, sf_small):
         assert plain.exceptAll(pp).union(pp.exceptAll(plain)).count() == 0
 
 
+def _random_corpus(seed: int) -> "list[tuple[int, str]]":
+    """Documents over a 15-word vocabulary: random base texts plus
+    truncated, extended and word-substituted copies of each, so pairs
+    land on and near exact Jaccard ratios (55/100-style boundaries) as
+    well as on chance overlaps."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(15)]
+    texts = []
+    for _ in range(14):
+        words = [rng.choice(vocab) for _ in range(rng.randint(3, 45))]
+        texts.append(words)
+        for _ in range(rng.randint(1, 4)):
+            op = rng.random()
+            if op < 0.35:
+                copy = words[: rng.randint(1, len(words))]
+            elif op < 0.7:
+                copy = words + [rng.choice(vocab) for _ in range(rng.randint(1, 20))]
+            else:
+                copy = [rng.choice(vocab) if rng.random() < 0.15 else w for w in words]
+            texts.append(copy)
+    return [(i, " ".join(words)) for i, words in enumerate(texts)]
+
+
+@pytest.mark.parametrize("seed", [11, 12])
+def test_jaccard_prefix_equals_plain_index_on_random_corpora(spark, seed):
+    """Differential: the prefix plan (prefix intersect, length filter,
+    overlap bound) returns exactly the plain inverted index's pairs."""
+    from spark_fuse_spark.operators.dedup import jaccard_prefix_pairs, ngram_jaccard_pairs
+
+    docs = spark.createDataFrame(_random_corpus(seed), "doc_id long, text string").cache()
+    for t in (1 / 3, 0.5, 0.55, 0.7, 0.8, 1.0):
+        plain = {tuple(r) for r in ngram_jaccard_pairs(docs, threshold=t, prefix_filter=False).collect()}
+        pp = {tuple(r) for r in jaccard_prefix_pairs(docs, threshold=t).collect()}
+        assert pp == plain, (t, sorted(plain ^ pp))
+        assert plain, t  # the corpus has pairs at every threshold
+    docs.unpersist()
+
+
+def _nested_docs(spark, outer_extra: int):
+    """Doc 1's 57 words make 55 3-shingles; doc 2 is doc 1 followed by
+    ``outer_extra`` new words, so doc 1's shingles are a subset of doc
+    2's ``55 + outer_extra``."""
+    inner = [f"a{i}" for i in range(57)]
+    outer = inner + [f"b{i}" for i in range(outer_extra)]
+    return spark.createDataFrame(
+        [(1, " ".join(inner)), (2, " ".join(outer))], "doc_id long, text string"
+    )
+
+
+def test_jaccard_prefix_keeps_float_boundary_pair(spark):
+    """A 100-shingle set holding a 55-shingle set has Jaccard exactly
+    0.55, but 0.55·100 = 55.00000000000001 in doubles: a ceil/floor of
+    the raw product shortened the prefix and tightened the length filter
+    past the pair.  Integer bounds derived from t round toward keeping
+    the pair."""
+    from spark_fuse_spark.operators.dedup import (
+        _jaccard_prefix_candidates,
+        jaccard_prefix_pairs,
+    )
+
+    # hand-built rarest-first sets: the 55 shared hashes, then doc 2's 45
+    sets = spark.createDataFrame(
+        [(1, 55, list(range(55))), (2, 100, list(range(100)))],
+        "__id long, __n int, __hs array<long>",
+    )
+    assert [tuple(r) for r in _jaccard_prefix_candidates(sets, 0.55).collect()] == [(1, 2)]
+    got = [tuple(r) for r in jaccard_prefix_pairs(_nested_docs(spark, 45), threshold=0.55).collect()]
+    assert got == [(1, 2, 0.55)]
+
+
+def test_containment_prefix_keeps_float_boundary_pair(spark):
+    """Containment 55/100 = 0.55 with the 55 shared shingles ranked last
+    in the smaller document: its prefix is the 46 rarest shingles only
+    when ceil(0.55·100) is taken as 55, not 56."""
+    from spark_fuse_spark.operators.dedup import containment_pairs
+
+    shared = [f"c{i}" for i in range(57)]  # 55 shingles, in both documents
+    small = [f"u{i}" for i in range(45)] + shared  # + 45 of its own: 100
+    large = shared + [f"v{i}" for i in range(60)]  # + 60 of its own: 115
+    docs = spark.createDataFrame(
+        [(1, " ".join(small)), (2, " ".join(large))], "doc_id long, text string"
+    )
+    got = [tuple(r) for r in containment_pairs(docs, threshold=0.55).collect()]
+    assert got == [(1, 2, 0.55)]
+
+
 def test_jaccard_prefix_rejects_bad_threshold(spark):
     from spark_fuse_spark.operators.dedup import jaccard_prefix_pairs
 

@@ -494,16 +494,19 @@ def test_plan_contract(spark, sf_small, name):
 JOB_BUDGETS = {
     "c_mor_delete_read": 9,
     "c_mor_upsert_read": 9,
-    "c_scd2_point_in_time": 16,
-    "c_scd2_temporal_join": 18,
-    "c_scd2_two_batch": 12,
-    "d_containment": 17,
-    "d_dedup_clusters": 31,
-    "d_lsh_recall_audit": 20,
-    "d_minhash_bbit": 19,
-    "d_minhash_incremental": 18,
-    "d_minhash_lsh": 16,
-    "d_semantic_dedup": 33,
+    "c_scd1_two_batch": 12,
+    "c_scd2_point_in_time": 15,
+    "c_scd2_temporal_join": 17,
+    "c_scd2_two_batch": 11,
+    "d_containment": 12,
+    "d_dedup_clusters": 24,
+    "d_lsh_recall_audit": 14,
+    "d_minhash_bbit": 13,
+    "d_minhash_incremental": 13,
+    "d_minhash_lsh": 12,
+    "d_ngram_jaccard": 12,
+    "d_semantic_dedup": 31,
+    "d_winnowing": 12,
     "x_bfs_levels": 26,
     "x_hits_suppliers": 32,
     "x_kcore": 32,
@@ -1081,6 +1084,40 @@ def test_executed_metrics_hard_negatives_stay_indexed(spark, sf_small):
     # all-pairs would be ~n_docs^2 pair rows before filtering; the
     # inverted index keeps total shuffled rows well under that square
     assert 0 < s["shuffle_records"] < 40 * n_docs * n_docs, s
+
+
+def test_exploded_shingles_builds_each_document_once(spark, sf_small):
+    """The optimized plan of the shingle explode holds the tokenize +
+    shingle tree once: no filter inferred from ``explode`` copies it
+    below the projection."""
+    from spark_fuse_spark.operators.dedup import _exploded_shingles
+    from spark_fuse_spark.tables import load_table
+
+    e = _exploded_shingles(load_table(spark, sf_small, "documents"), "text", "doc_id", 3)
+    plan = e._jdf.queryExecution().optimizedPlan().toString()
+    # array_distinct appears once per copy of word_shingles' tree
+    assert plan.count("array_distinct(") == 1, plan
+
+
+def test_jaccard_prefix_overlap_bound_prunes_candidates(spark, sf_small):
+    """The overlap bound keeps every true pair and little else: on
+    sf0.001 at t = 0.5 the prefix join alone yields 855 candidate pairs
+    for 28 true ones; with the bound at most 3 candidates per true pair
+    remain (57 when measured)."""
+    from spark_fuse_spark.operators.dedup import (
+        _exploded_shingles,
+        _jaccard_prefix_candidates,
+        _shingle_sets,
+        ngram_jaccard_pairs,
+    )
+    from spark_fuse_spark.tables import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+    sets = _shingle_sets(_exploded_shingles(docs, "text", "doc_id", 3))
+    cands = {tuple(r) for r in _jaccard_prefix_candidates(sets, 0.5).collect()}
+    exact = {(r.id_a, r.id_b) for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()}
+    assert exact and exact <= cands
+    assert len(cands) <= 3 * len(exact), (len(cands), len(exact))
 
 
 def test_prefix_guard_kills_hot_shingle_candidates(spark):

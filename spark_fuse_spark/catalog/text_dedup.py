@@ -775,7 +775,9 @@ def t_triplets(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.packing import with_prefix_sum
 
     docs = load_table(spark, sf, "documents")
-    pairs = ngram_jaccard_pairs(docs, k=3, threshold=0.5)
+    # both halves of the sym union read the pairs: checkpoint them so the
+    # pair pipeline runs once
+    pairs = ngram_jaccard_pairs(docs, k=3, threshold=0.5).localCheckpoint(eager=False)
     sym = pairs.select(
         F.col("id_a").alias("anchor_id"), F.col("id_b").alias("positive_id"), "jaccard"
     ).unionAll(
@@ -1627,7 +1629,7 @@ ORDER BY anchor_id
     "smaller candidate id for cross-engine determinism.",
 )
 def t_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.dedup import _exploded_shingles
+    from ..operators.dedup import _exploded_shingles, _shingle_census
 
     # the pair table feeds BOTH halves of the sym union and alias-renamed
     # subtrees get no exchange reuse, so without sharing the whole
@@ -1638,19 +1640,7 @@ def t_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     # set across suite queries measurably thrashed the shared storage
     # pool, and re-running the explode once per join leg is cheaper).
     e = _exploded_shingles(load_table(spark, sf, "documents"), "text", "doc_id", 3)
-    a = e.select(
-        F.col("__id").alias("id_a"), F.col("__n").alias("na"), "__h"
-    )
-    b = e.select(
-        F.col("__id").alias("id_b"), F.col("__n").alias("nb"), "__h"
-    )
-    pairs = (
-        a.join(b, "__h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .localCheckpoint(eager=False)
-    )
+    pairs = _shingle_census(e).localCheckpoint(eager=False)
     sym = pairs.select(
         F.col("id_a").alias("anchor_id"),
         F.col("id_b").alias("cand_id"),

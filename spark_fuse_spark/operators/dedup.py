@@ -24,8 +24,13 @@ three MinHash variants) verifies its candidate pairs the same way:
 :func:`_shared_shingles` joins each pair to both documents' shingle
 sets and counts ``size(array_intersect)`` — two id-keyed joins over
 O(candidates) rows.  The only shingle-hash self-joins are the
-candidate generators (prefix and containment) and the
-``threshold <= 0`` census (:func:`_shingle_census`).
+candidate generators (prefix and containment) and the per-pair
+shared-count census (:func:`_shingle_census`).
+
+Materialization: an operator checkpoints only a frame that it reads
+more than once itself (the exploded shingles, the shingle sets, the
+signatures); its result is a plan.  A caller that reads a result more
+than once checkpoints it.
 
 Every hash is the *portable* md5-based hash from ``functions.hashing``,
 so all five strategies are differential-testable against a SQL oracle —
@@ -131,10 +136,11 @@ def ngram_jaccard_pairs(
 
 def _shingle_census(e: DataFrame) -> DataFrame:
     """``(id_a, id_b, na, nb, shared)`` for EVERY pair sharing ≥ 1
-    shingle: the plain inverted-index self-join on shingle hash plus a
-    per-pair count (candidate volume Σ_h df(h)²).  Only the
-    ``threshold <= 0`` census paths use it — no prefix can prune a pair
-    that shares one shingle."""
+    hash of ``e`` (``(__id, __n, __h)`` rows): the plain inverted-index
+    self-join on the hash plus a per-pair count (candidate volume
+    Σ_h df(h)²).  The ``threshold <= 0`` census paths use it — no prefix
+    can prune a pair that shares one shingle — and so do the winnowing
+    pairs, whose fingerprint index is capped by document frequency."""
     a = e.select(F.col("__id").alias("id_a"), F.col("__n").alias("na"), "__h")
     b = e.select(F.col("__id").alias("id_b"), F.col("__n").alias("nb"), "__h")
     return (
@@ -219,11 +225,15 @@ def containment_pairs(
     falls back to the plain inverted-index census (no prefix can prune
     an every-shared-shingle census).
     """
-    if threshold > 0.0:
-        return _containment_prefix_pairs(df, text_col, id_col, k, threshold)
-    return _containment_rows(
-        _shingle_census(_exploded_shingles(df, text_col, id_col, k)), threshold
-    )
+    if threshold <= 0.0:
+        return _containment_rows(
+            _shingle_census(_exploded_shingles(df, text_col, id_col, k)), threshold
+        )
+    # the exploded frame feeds the set build AND the candidate join's
+    # full-index side; the sets feed the prefix and both verify legs
+    e, sets = _checkpointed_sets(df, text_col, id_col, k)
+    candidates = _containment_prefix_candidates(e, sets, threshold)
+    return _containment_rows(_shared_shingles(candidates, sets), threshold)
 
 
 def _containment_rows(shared: DataFrame, threshold: float) -> DataFrame:
@@ -246,23 +256,6 @@ def _containment_rows(shared: DataFrame, threshold: float) -> DataFrame:
             ),
             F.round("containment", 6).alias("containment"),
         )
-    )
-
-
-def _containment_prefix_pairs(
-    df: DataFrame, text_col: str, id_col: str, k: int, threshold: float
-) -> DataFrame:
-    """Prefix-filtered candidate generation + exact verify for
-    :func:`containment_pairs` (see its docstring for the exactness
-    argument).  The designated-smaller side (fewer distinct shingles,
-    ties to the smaller id) contributes only its rarest-shingle prefix
-    to the join; the other side contributes its full index."""
-    # the exploded frame feeds the set build AND the candidate join's
-    # full-index side; the sets feed the prefix and both verify legs
-    e, sets = _checkpointed_sets(df, text_col, id_col, k)
-    candidates = _containment_prefix_candidates(e, sets, threshold)
-    return _containment_rows(_shared_shingles(candidates, sets), threshold).localCheckpoint(
-        eager=True
     )
 
 
@@ -418,8 +411,7 @@ def minhash_lsh_pairs(
     # inside the one query that reads it twice.
     e = _exploded_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
     candidates = _band_candidates(_minhash_mins(e, num_hashes, seed), num_hashes, bands)
-    out = _jaccard_rows(_shared_shingles(candidates, _unordered_sets(e)), threshold)
-    return out.localCheckpoint(eager=True)
+    return _jaccard_rows(_shared_shingles(candidates, _unordered_sets(e)), threshold)
 
 
 def simhash_signatures(
@@ -665,7 +657,6 @@ def cross_corpus_overlap(
     id_col: str = "doc_id",
     k: int = 5,
     min_shared: int = 1,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """Benchmark-contamination check: distinct k-shingle overlap between
     every training (``corpus``) and eval (``probe``) document.
@@ -678,7 +669,7 @@ def cross_corpus_overlap(
     Scale shape: same inverted-index equi-join as
     :func:`ngram_jaccard_pairs`, but CROSS-corpus, and the probe side
     (benchmark suites are thousands of items, not billions) is
-    broadcast by default — the 100 TB training side is never shuffled,
+    broadcast — the 100 TB training side is never shuffled,
     the check is one scan + map-side hash join + one groupBy keyed by
     (train, eval) pair.
     """
@@ -688,10 +679,8 @@ def cross_corpus_overlap(
     b = _exploded_shingles(probe, text_col, id_col, k).select(
         F.col("__id").alias("eval_id"), F.col("__n").alias("ne"), F.col("__h").alias("__h")
     )
-    if broadcast_probe:
-        b = F.broadcast(b)
     return (
-        a.join(b, "__h")
+        a.join(F.broadcast(b), "__h")
         .groupBy("train_id", "eval_id", "ne")
         .agg(F.count(F.lit(1)).alias("shared_ngrams"))
         .where(F.col("shared_ngrams") >= min_shared)
@@ -751,10 +740,9 @@ def jaccard_prefix_pairs(
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")
     _, sets = _checkpointed_sets(df, text_col, id_col, k)
-    result = _jaccard_rows(
+    return _jaccard_rows(
         _shared_shingles(_jaccard_prefix_candidates(sets, threshold), sets), threshold
     )
-    return result.localCheckpoint(eager=True)
 
 
 def _checkpointed_sets(
@@ -875,8 +863,7 @@ def incremental_minhash_pairs(
         .where(F.col("__na") | F.col("__nb"))
         .select("id_a", "id_b")
     )
-    out = _jaccard_rows(_shared_shingles(touching, _unordered_sets(e)), threshold)
-    return out.localCheckpoint(eager=True)
+    return _jaccard_rows(_shared_shingles(touching, _unordered_sets(e)), threshold)
 
 
 def bbit_minhash_pairs(
@@ -940,7 +927,6 @@ def bbit_minhash_pairs(
         exact.join(sa, "id_a")
         .join(sb, "id_b")
         .select("id_a", "id_b", F.round(est, 6).alias("bbit_estimate"), "jaccard")
-        .localCheckpoint(eager=True)
     )
 
 
@@ -1046,21 +1032,9 @@ def winnowing_pairs(
     )
     kept = fps.join(rare.select("fingerprint"), "fingerprint").localCheckpoint(eager=False)
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
-    e = kept.join(sizes, id_col)
-    a = e.select(
-        F.col(id_col).alias("id_a"), F.col("__n").alias("na"), "fingerprint"
+    e = kept.join(sizes, id_col).select(
+        F.col(id_col).alias("__id"), "__n", F.col("fingerprint").alias("__h")
     )
-    b = e.select(
-        F.col(id_col).alias("id_b"), F.col("__n").alias("nb"), "fingerprint"
-    )
-    shared = (
-        a.join(b, "fingerprint")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
+    shared = _shingle_census(e).filter(F.col("shared") >= min_shared)
     jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    return shared.select(
-        "id_a", "id_b", "shared", F.round(jac, 6).alias("jaccard")
-    ).localCheckpoint(eager=True)
+    return shared.select("id_a", "id_b", "shared", F.round(jac, 6).alias("jaccard"))

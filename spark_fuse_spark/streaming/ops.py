@@ -204,6 +204,15 @@ def dedup_within_watermark(
     return deduped.dropDuplicates(list(keys))
 
 
+def _foreach_batch_sink(stream: DataFrame, apply_batch, checkpoint: "str | None"):
+    """The stream's ``foreachBatch(apply_batch)`` writer in update mode,
+    with ``checkpoint`` as its checkpoint location when given."""
+    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("update")
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer
+
+
 def stream_to_scd(
     stream: DataFrame,
     target: str,
@@ -214,20 +223,17 @@ def stream_to_scd(
 ):
     """``foreachBatch`` sink applying each micro-batch through the SCD
     protocols (cdc module).  Hash-gated updates make replayed batches
-    idempotent, so failure/retry converges to the same table."""
+    idempotent, so failure/retry converges to the same table.  An empty
+    micro-batch writes nothing: the SCD protocols answer it themselves,
+    inside the probe or aggregate they run anyway."""
     from spark_fuse_spark.cdc import apply_change_tracking
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         apply_change_tracking(
             batch_df.sparkSession, batch_df, target, business_keys, mode=mode, **scd_kwargs
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    return _foreach_batch_sink(stream, apply_batch, checkpoint)
 
 
 SESSION_STATE_SCHEMA = StructType(
@@ -547,10 +553,7 @@ def stream_changelog_publisher(
     snapshots — deletions need an explicit tombstone upstream).
     """
     apply_batch = changelog_batch_applier(target, changelog, keys)
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    return _foreach_batch_sink(stream, apply_batch, checkpoint)
 
 
 def changelog_batch_applier(target: str, changelog: str, keys: Sequence[str]):
@@ -558,15 +561,16 @@ def changelog_batch_applier(target: str, changelog: str, keys: Sequence[str]):
     exposed separately so batch backfills and tests drive the identical
     code path without a streaming query."""
     from spark_fuse_spark.cdc.diff import apply_changelog, snapshot_diff
+    from spark_fuse_spark.cdc.store import ParquetStore, staged_overwrite
+
+    store = ParquetStore()
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        import os
-
-        if os.path.exists(target):
-            current = spark.read.parquet(target)
+        if store.exists(spark, target):
+            current = store.read(spark, target)
         else:
             current = spark.createDataFrame([], batch_df.schema)
         # restrict the diff to keys present in this batch: absent rows are
@@ -580,14 +584,7 @@ def changelog_batch_applier(target: str, changelog: str, keys: Sequence[str]):
         delta.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
             changelog
         )
-        next_state = apply_changelog(current, delta, list(keys))
-        staged = f"{target}__staged_{batch_id}"
-        next_state.write.mode("overwrite").parquet(staged)
-        import shutil
-
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.replace(staged, target)
+        staged_overwrite(apply_changelog(current, delta, list(keys)), target)
 
     return apply_batch
 
@@ -735,17 +732,18 @@ def join_view_batch_applier(
     :func:`changelog_batch_applier`.
     """
     from spark_fuse_spark.cdc.diff import incremental_join_merge
+    from spark_fuse_spark.cdc.store import ParquetStore, staged_overwrite
+
+    store = ParquetStore()
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        import os
-
         dim = spark.read.parquet(dim_path)
         fact_cols = [c for c in batch_df.columns if c not in (op_col, "batch_id")]
-        if os.path.exists(view_path):
-            view = spark.read.parquet(view_path)
+        if store.exists(spark, view_path):
+            view = store.read(spark, view_path)
         else:
             view = (
                 batch_df.select(*fact_cols)
@@ -774,13 +772,7 @@ def join_view_batch_applier(
             fact_key=fact_key, fk=fk, dim_key=dim_key,
             dim_attrs=list(dim_attrs), op_col=op_col,
         )
-        staged = f"{view_path}__staged_{batch_id}"
-        merged.write.mode("overwrite").parquet(staged)
-        import shutil
-
-        if os.path.exists(view_path):
-            shutil.rmtree(view_path)
-        os.replace(staged, view_path)
+        staged_overwrite(merged, view_path)
 
     return apply_batch
 
@@ -800,10 +792,7 @@ def stream_join_view(
     apply_batch = join_view_batch_applier(
         view_path, dim_path, fact_key, fk, dim_key, dim_attrs
     )
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    return _foreach_batch_sink(stream, apply_batch, checkpoint)
 
 
 def neardup_batch_applier(
@@ -921,10 +910,7 @@ def stream_neardup_filter(
     """``foreachBatch`` sink wiring :func:`neardup_batch_applier` to a
     document stream."""
     apply_batch = neardup_batch_applier(corpus_path, pairs_path, **kwargs)
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    return _foreach_batch_sink(stream, apply_batch, checkpoint)
 
 
 def windowed_distinct_estimate(

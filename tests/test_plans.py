@@ -75,11 +75,10 @@ CONTRACTS = {
     # "no cartesian" for all of them
     "d_dedup_exact": PlanExpectation(require_partial_agg=True, max_exchanges=2),
     # exact jaccard now rides the prefix filter (hot-shingle guard): the
-    # freq/set/candidate/verify stages are lineage-truncated by the eager
-    # localCheckpoint (shape pinned by the identity test vs the plain
-    # inverted index + the hot-shingle candidate contract); the final plan
-    # may only sort the checkpointed pairs
-    "d_ngram_jaccard": PlanExpectation(max_exchanges=1),
+    # freq/set stages are lineage-truncated by the eager checkpoint of the
+    # shingle sets; the plan over them is the prefix candidate aggregate
+    # (partial first) and the two id-keyed verify joins
+    "d_ngram_jaccard": PlanExpectation(require_partial_agg=True, max_exchanges=2),
     "d_simhash": PlanExpectation(max_exchanges=4),
     # LSH near-dup: candidate pairs are explicitly broadcast into the
     # verify joins (the corpus must never shuffle for verification)
@@ -120,11 +119,11 @@ CONTRACTS = {
     "t_pii_redact": PlanExpectation(max_exchanges=1),
     "t_chunk_documents": PlanExpectation(max_exchanges=1),
     "t_repetition": PlanExpectation(require_partial_agg=True, max_exchanges=3),
-    # prefix-filtered exact jaccard: the freq/set/candidate/verify stages
-    # are lineage-truncated by the eager localCheckpoint (their shape is
-    # pinned by the identity test vs the plain inverted index); the final
-    # plan may only sort the checkpointed pairs
-    "d_jaccard_prefix": PlanExpectation(max_exchanges=1),
+    # prefix-filtered exact jaccard: the freq/set stages are
+    # lineage-truncated by the eager checkpoint of the shingle sets; the
+    # plan over them is the prefix candidate aggregate (partial first)
+    # and the two id-keyed verify joins
+    "d_jaccard_prefix": PlanExpectation(require_partial_agg=True, max_exchanges=2),
     # incremental dedup: one anti-join + one fingerprint agg, nothing else
     "d_incremental_dedup": PlanExpectation(require_partial_agg=True, max_exchanges=2),
     "t_source_quality": PlanExpectation(require_partial_agg=True, max_exchanges=2),
@@ -367,11 +366,11 @@ CONTRACTS = {
     "v_bq_topk": PlanExpectation(
         min_broadcast_joins=3, require_partial_agg=True, max_exchanges=20
     ),
-    # b-bit minhash: band-groupBy candidates + candidate-restricted exact
-    # verify, both lineage-truncated by the eager localCheckpoint (shape
-    # pinned by the band/verify tests + the oracle); the final plan may
-    # only sort the checkpointed pairs
-    "d_minhash_bbit": PlanExpectation(max_exchanges=1),
+    # b-bit minhash over the lazily checkpointed shingles and b-bit
+    # signatures: the band-groupBy candidates, the shingle-set aggregate
+    # (partial first), the candidate-restricted exact verify and the
+    # estimate joins
+    "d_minhash_bbit": PlanExpectation(require_partial_agg=True, max_exchanges=5),
     # Lorenz deciles: two-phase prefix rank (range partition + local
     # windows + bounded offsets broadcast); the cumulative step is now the
     # 10-cell prefix_panel fold (round 7) — the triangular decile
@@ -498,15 +497,15 @@ JOB_BUDGETS = {
     "c_scd2_point_in_time": 15,
     "c_scd2_temporal_join": 17,
     "c_scd2_two_batch": 11,
-    "d_containment": 12,
-    "d_dedup_clusters": 24,
+    "d_containment": 11,
+    "d_dedup_clusters": 23,
     "d_lsh_recall_audit": 14,
-    "d_minhash_bbit": 13,
-    "d_minhash_incremental": 13,
-    "d_minhash_lsh": 12,
-    "d_ngram_jaccard": 12,
+    "d_minhash_bbit": 12,
+    "d_minhash_incremental": 12,
+    "d_minhash_lsh": 11,
+    "d_ngram_jaccard": 11,
     "d_semantic_dedup": 31,
-    "d_winnowing": 12,
+    "d_winnowing": 11,
     "x_bfs_levels": 26,
     "x_hits_suppliers": 32,
     "x_kcore": 32,
@@ -980,10 +979,21 @@ def test_executed_metrics_sq8_corpus_never_shuffles(spark, sf_small):
     assert s["shuffle_records"] <= 1000        # top-k rows only
 
 
+def test_contrastive_triplets_builds_pairs_once(spark, sf_small):
+    """Both halves of t_contrastive_triplets' union read the near-dup
+    pairs, which the pair operator returns as a plan: the query's own
+    lazy checkpoint keeps the plan at 5 join nodes.  Without it each
+    half carries the whole prefix-candidate and verify pipeline (11)."""
+    from spark_fuse_spark.plans import join_strategies
+
+    df = load_all()["t_contrastive_triplets"].spark(spark, sf_small)
+    joins = join_strategies(df)
+    assert sum(joins.values()) <= 5, joins
+
+
 def test_executed_metrics_containment_inverted_index(spark, sf_small):
-    """Measured contract for the containment candidate stage (the verify
-    stage is lineage-truncated by containment_pairs' eager checkpoint, so
-    it is measured here on the exposed candidate builder): the shuffle
+    """Measured contract for the containment candidate stage, read on
+    the exposed candidate builder over unshared shingle sets: the shuffle
     carries exploded shingle-hash rows (O(total shingles), ~12 per scanned
     doc at this SF) plus the prefix-join output — NEVER the all-pairs
     matrix (which would be ~500k records for 1k docs)."""

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import attach_binary_payload, binary_metadata
-from ..operators.similarity import brute_force_topk
+from ..operators.similarity import _approx_topk, _top_k, brute_force_topk
 from ..tables import load_table
 from . import register
 
@@ -904,29 +904,9 @@ def v_matryoshka_cascade(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("c16"),
         )
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.col("c16").desc(), F.col("neighbor_id"))
-    cand = (
-        coarse.withColumn("rk", F.row_number().over(w1))
-        .where(F.col("rk") <= 50)
-        .select("query_id", "neighbor_id")
-    )
-    exact = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), "v")
-        .join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("v"), F.col("qv")), 6).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-        .orderBy("query_id", "rank")
-    )
+    return _approx_topk(
+        coarse, "c16", 5, 50, emb, q, "vec_id", "v", "query_id", "qv"
+    ).orderBy("query_id", "rank")
 
 
 def _ann_recall_oracle(dims: int, k: int) -> str:
@@ -1170,12 +1150,7 @@ def v_bq_topk(spark: SparkSession, sf: str) -> DataFrame:
             F.bit_count(F.expr("w0 ^ q0")) + F.bit_count(F.expr("w1 ^ q1"))
         ).cast("long").alias("hamming"),
     )
-    w_cand = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    cand = (
-        ham.withColumn("crk", F.row_number().over(w_cand))
-        .where(F.col("crk") <= 50)
-        .drop("crk")
-    )
+    cand = _top_k(ham, "query_id", F.col("hamming").asc(), 50).drop("rank")
     rerank = (
         cand.join(e.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
         .join(F.broadcast(q.select("query_id", "qv")), "query_id")
@@ -1186,12 +1161,8 @@ def v_bq_topk(spark: SparkSession, sf: str) -> DataFrame:
             F.round(cosine_similarity(F.col("v"), F.col("qv")), 6).alias("cosine"),
         )
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
     return (
-        rerank.withColumn("rank", F.row_number().over(w_rank).cast("int"))
-        .where(F.col("rank") <= 10)
+        _top_k(rerank, "query_id", F.col("cosine").desc(), 10)
         .select("query_id", "neighbor_id", "cosine", "hamming", "rank")
         .orderBy("query_id", "rank")
     )

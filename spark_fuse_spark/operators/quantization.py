@@ -24,8 +24,8 @@ Scale story (100 TB of embeddings):
   shuffle of corpus rows; only the narrow (query, neighbor, score)
   triples move;
 * exact re-ranking joins the tiny candidate set back to corpus
-  vectors (broadcast semi-join), the same verify shape as
-  ``minhash_lsh_pairs``.
+  vectors (broadcast semi-join) through ``similarity._exact_rerank``,
+  the one refine step of every ANN operator (``similarity._approx_topk``).
 
 Cosine semantics: vectors are L2-normalized before codebook training
 and encoding, so the ADC score approximates the cosine and the optional
@@ -34,12 +34,13 @@ re-rank computes it exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
-from ..functions.vectors import cosine_similarity, l2_normalize
+from ..functions.vectors import l2_normalize
+from .similarity import _approx_topk, _sample_matrix, ivf_assign, ivf_probes
 
 __all__ = [
     "train_pq_codebooks",
@@ -53,35 +54,6 @@ __all__ = [
     "rp_project",
     "rp_topk",
 ]
-
-
-def _sample_matrix(
-    corpus: DataFrame,
-    vec_col: str,
-    sample_rows: int,
-    sample_fraction: "float | None",
-    id_col: "str | None",
-    salt: str,
-):
-    """Unit-normalized sample matrix via the deterministic hash-gate +
-    CollectLimit contract (see ``train_ivf_centroids``: the gate is a
-    narrow filter composed with the scan; the limit stops the read)."""
-    import numpy as np
-
-    sample = corpus
-    if sample_fraction is not None:
-        if id_col is None:
-            raise ValueError("sample_fraction requires id_col for the hash gate")
-        from .sampling import sample_gate
-
-        sample = sample.where(sample_gate(id_col, sample_fraction, salt=salt))
-    rows = sample.select(F.col(vec_col).cast("array<double>")).limit(sample_rows).collect()
-    x = np.asarray([r[0] for r in rows], dtype=np.float64)
-    if x.ndim != 2 or x.shape[0] == 0:
-        raise ValueError("empty or ragged vector sample; cannot train codebooks")
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    return x / norms
 
 
 def _lloyd(x, k: int, seed: int, max_iter: int):
@@ -125,7 +97,12 @@ def train_pq_codebooks(
     may be given to skip schema inspection; it must divide into ``m``
     equal subspaces.
     """
+    import numpy as np
+
     x = _sample_matrix(corpus, vec_col, sample_rows, sample_fraction, id_col, f"pq{seed}")
+    norms = np.linalg.norm(x, axis=1, keepdims=True)
+    norms[norms == 0.0] = 1.0
+    x = x / norms
     d = x.shape[1]
     if dims is not None and dims != d:
         raise ValueError(f"dims={dims} does not match sampled vectors ({d})")
@@ -207,6 +184,16 @@ def _with_lut(
     return queries.withColumn(lut_col, lut(F.col(query_vec)))
 
 
+def _adc(code_col: str, ksub: int) -> Column:
+    """ADC score of a PQ-coded row against its query's ``__lut``
+    (``_with_lut``): the sum over subspaces ``j`` of slot
+    ``j*ksub + code[j]``."""
+    return F.expr(
+        f"aggregate(zip_with({code_col}, sequence(0, size({code_col}) - 1), "
+        f"(c, j) -> element_at(__lut, j * {ksub} + c + 1)), 0.0D, (a, x) -> a + x)"
+    )
+
+
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -238,41 +225,13 @@ def pq_adc_topk(
     q = _with_lut(queries.select(query_id, query_vec), codebooks, query_vec, "__lut")
 
     # narrow scoring relation: (query, neighbor, adc) — corpus floats never move
-    adc = F.expr(
-        f"aggregate(zip_with({code_col}, sequence(0, size({code_col}) - 1), "
-        f"(c, j) -> element_at(__lut, j * {ksub} + c + 1)), 0.0D, (a, x) -> a + x)"
-    )
     scored = (
         encoded.select(F.col(corpus_id).alias("neighbor_id"), code_col)
         .crossJoin(F.broadcast(q.select(query_id, "__lut")))
-        .select(query_id, "neighbor_id", F.round(adc, 6).alias("adc"))
+        .select(query_id, "neighbor_id", F.round(_adc(code_col, ksub), 6).alias("adc"))
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("adc").desc(), F.col("neighbor_id").asc())
-    take = max(k, rerank)
-    cand = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= take)
-    )
-    if not rerank:
-        return cand.select(query_id, "neighbor_id", F.col("adc").alias("cosine"), "rank")
-
-    # exact verify on the tiny candidate set (minhash-verify shape):
-    # candidates broadcast onto one corpus scan, then top-k by true cosine
-    exact = (
-        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec))
-        .join(F.broadcast(cand.select(query_id, "neighbor_id")), "neighbor_id")
-        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-        .select(
-            query_id,
-            "neighbor_id",
-            F.round(cosine_similarity(F.col(corpus_vec), F.col(query_vec)), 6).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "cosine", "rank")
+    return _approx_topk(
+        scored, "adc", k, rerank, corpus, queries, corpus_id, corpus_vec, query_id, query_vec
     )
 
 
@@ -390,27 +349,8 @@ def sq8_adc_topk(
         .crossJoin(F.broadcast(q))
         .select(query_id, "neighbor_id", F.round(adc, 6).alias("adc"))
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("adc").desc(), F.col("neighbor_id").asc())
-    take = max(k, rerank)
-    cand = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= take)
-    if not rerank:
-        return cand.select(query_id, "neighbor_id", F.col("adc").alias("cosine"), "rank")
-
-    exact = (
-        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec))
-        .join(F.broadcast(cand.select(query_id, "neighbor_id")), "neighbor_id")
-        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-        .select(
-            query_id,
-            "neighbor_id",
-            F.round(cosine_similarity(F.col(corpus_vec), F.col(query_vec)), 6).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "cosine", "rank")
+    return _approx_topk(
+        scored, "adc", k, rerank, corpus, queries, corpus_id, corpus_vec, query_id, query_vec
     )
 
 
@@ -444,8 +384,6 @@ def ivfpq_topk(
     Encode-once contract: if ``corpus`` already carries ``code_col``
     and ``ivf_list`` (a persisted index table), both are reused.
     """
-    from .similarity import ivf_assign, ivf_probes
-
     ksub = len(codebooks[0])
     indexed = corpus
     if "ivf_list" not in indexed.columns:
@@ -456,36 +394,13 @@ def ivfpq_topk(
     probed = ivf_probes(queries, centroids, nprobe, query_id, query_vec)
     q = _with_lut(probed, codebooks, query_vec, "__lut")
 
-    adc = F.expr(
-        f"aggregate(zip_with({code_col}, sequence(0, size({code_col}) - 1), "
-        f"(c, j) -> element_at(__lut, j * {ksub} + c + 1)), 0.0D, (a, x) -> a + x)"
-    )
     scored = (
         indexed.select(F.col(corpus_id).alias("neighbor_id"), code_col, "ivf_list")
         .join(F.broadcast(q.select(query_id, "__lut", "ivf_list")), "ivf_list")
-        .select(query_id, "neighbor_id", F.round(adc, 6).alias("adc"))
+        .select(query_id, "neighbor_id", F.round(_adc(code_col, ksub), 6).alias("adc"))
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("adc").desc(), F.col("neighbor_id").asc())
-    take = max(k, rerank)
-    cand = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= take)
-    if not rerank:
-        return cand.select(query_id, "neighbor_id", F.col("adc").alias("cosine"), "rank")
-
-    exact = (
-        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec))
-        .join(F.broadcast(cand.select(query_id, "neighbor_id")), "neighbor_id")
-        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-        .select(
-            query_id,
-            "neighbor_id",
-            F.round(cosine_similarity(F.col(corpus_vec), F.col(query_vec)), 6).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "cosine", "rank")
+    return _approx_topk(
+        scored, "adc", k, rerank, corpus, queries, corpus_id, corpus_vec, query_id, query_vec
     )
 
 
@@ -601,27 +516,7 @@ def rp_topk(
     scored = enc.crossJoin(F.broadcast(q)).select(
         query_id, "neighbor_id", F.round(score, 6).alias("proj_cosine")
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("proj_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    take = max(k, rerank)
-    cand = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= take)
-    if not rerank:
-        return cand.select(query_id, "neighbor_id", F.col("proj_cosine").alias("cosine"), "rank")
-
-    exact = (
-        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec))
-        .join(F.broadcast(cand.select(query_id, "neighbor_id")), "neighbor_id")
-        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-        .select(
-            query_id,
-            "neighbor_id",
-            F.round(cosine_similarity(F.col(corpus_vec), F.col(query_vec)), 6).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "cosine", "rank")
+    return _approx_topk(
+        scored, "proj_cosine", k, rerank, corpus, queries, corpus_id, corpus_vec, query_id,
+        query_vec,
     )

@@ -17,16 +17,26 @@ Architecture for 100 TB:
   |corpus|/k × nprobe per query instead of |corpus|.
 * Hyperplane LSH: sign-bit bucketing with deterministic pseudo-random
   planes derived from the portable hash — no RNG state to ship.
+
+Every nearest-neighbour operator here and in ``operators.quantization``
+ends in one rule.  Rows are scored (exactly, or approximately: PQ/SQ8
+ADC, projected or prefix cosine); ``_top_k`` keeps the best per query
+(ties on ascending ``neighbor_id``, position ``rank``); and with
+``rerank = r > 0`` an approximate score only picks the top ``max(k, r)``
+candidates, which ``_exact_rerank`` re-scores with exact cosine before
+the final ``_top_k``.  ``_approx_topk`` is that rule for the
+approximate scorers.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, dot, l2_norm, l2_normalize
+from .topk import top_k_per_group
 
 __all__ = [
     "identity_embedding",
@@ -145,6 +155,52 @@ class SimilarityPipeline:
         return self.choose(self.run(df))
 
 
+# ------------------------------------------------------------------ ranking
+def _top_k(scored: DataFrame, query_id: str, by: Column, k: int) -> DataFrame:
+    """The ``k`` best rows per query by sort Column ``by``, ties on
+    ascending ``neighbor_id``, numbered from 1 in ``rank``."""
+    return top_k_per_group(
+        scored, [query_id], [by, F.col("neighbor_id").asc()], k,
+        descending=None, rank_column="rank",
+    )
+
+
+def _exact_rerank(
+    corpus: DataFrame, queries: DataFrame, cand: DataFrame, k: int,
+    corpus_id: str, corpus_vec: str, query_id: str, query_vec: str,
+) -> DataFrame:
+    """Exact-cosine top-``k`` over the ``(query_id, neighbor_id)`` rows of
+    ``cand``: the candidates are broadcast onto one corpus scan and
+    joined to the broadcast query panel, so no corpus row shuffles.
+    Output: ``query_id, neighbor_id, cosine, rank``."""
+    exact = (
+        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec))
+        .join(F.broadcast(cand.select(query_id, "neighbor_id")), "neighbor_id")
+        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
+        .select(
+            query_id,
+            "neighbor_id",
+            F.round(cosine_similarity(F.col(corpus_vec), F.col(query_vec)), 6).alias("cosine"),
+        )
+    )
+    return _top_k(exact, query_id, F.col("cosine").desc(), k)
+
+
+def _approx_topk(
+    scored: DataFrame, score: str, k: int, rerank: int, corpus: DataFrame, queries: DataFrame,
+    corpus_id: str, corpus_vec: str, query_id: str, query_vec: str,
+) -> DataFrame:
+    """Top-``k`` per query from approximate scores: the top
+    ``max(k, rerank)`` rows of ``scored`` by column ``score``, then
+    ``_exact_rerank`` of those when ``rerank`` > 0, else ``score``
+    returned as ``cosine``.  Output: ``query_id, neighbor_id, cosine,
+    rank``."""
+    cand = _top_k(scored, query_id, F.col(score).desc(), max(k, rerank))
+    if not rerank:
+        return cand.select(query_id, "neighbor_id", F.col(score).alias("cosine"), "rank")
+    return _exact_rerank(corpus, queries, cand, k, corpus_id, corpus_vec, query_id, query_vec)
+
+
 # ------------------------------------------------------------------- search
 def brute_force_topk(
     corpus: DataFrame,
@@ -187,12 +243,7 @@ def brute_force_topk(
             F.round(sim, 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, query_id, F.col("cosine").desc(), k)
 
 
 def _array_lit_sql(values: "list[float]") -> str:
@@ -250,6 +301,34 @@ def _unit(v: list[float]) -> list[float]:
     return [x / n for x in v]
 
 
+def _sample_matrix(
+    corpus: DataFrame,
+    vec_col: str,
+    sample_rows: int,
+    sample_fraction: "float | None",
+    id_col: "str | None",
+    salt: str,
+):
+    """The training sample of ``vec_col`` as a float64 numpy matrix, taken
+    with the hash-gate + ``CollectLimit`` contract of
+    ``train_ivf_centroids`` (``salt`` keys the gate); shared with
+    ``quantization.train_pq_codebooks``."""
+    import numpy as np
+
+    sample = corpus
+    if sample_fraction is not None:
+        if id_col is None:
+            raise ValueError("sample_fraction requires id_col for the hash gate")
+        from .sampling import sample_gate
+
+        sample = sample.where(sample_gate(id_col, sample_fraction, salt=salt))
+    rows = sample.select(F.col(vec_col).cast("array<double>")).limit(sample_rows).collect()
+    x = np.asarray([r[0] for r in rows], dtype=np.float64)
+    if x.ndim != 2 or x.shape[0] == 0:
+        raise ValueError("empty or ragged vector sample; cannot train")
+    return x
+
+
 def train_ivf_centroids(
     corpus: DataFrame, k: int, vec_col: str = "embedding", seed: int = 42,
     sample_rows: int = 10_000, sample_fraction: "float | None" = None,
@@ -274,17 +353,7 @@ def train_ivf_centroids(
     """
     import numpy as np
 
-    sample = corpus
-    if sample_fraction is not None:
-        if id_col is None:
-            raise ValueError("sample_fraction requires id_col for the hash gate")
-        from .sampling import sample_gate
-
-        sample = sample.where(sample_gate(id_col, sample_fraction, salt=f"ivf{seed}"))
-    rows = sample.select(F.col(vec_col).cast("array<double>")).limit(sample_rows).collect()
-    x = np.asarray([r[0] for r in rows], dtype=np.float64)
-    if x.ndim != 2 or x.shape[0] == 0:
-        raise ValueError("empty or ragged vector sample; cannot train centroids")
+    x = _sample_matrix(corpus, vec_col, sample_rows, sample_fraction, id_col, f"ivf{seed}")
     k_eff = min(k, x.shape[0])
     rng = np.random.default_rng(seed)
     centers = x[rng.choice(x.shape[0], size=k_eff, replace=False)]
@@ -331,12 +400,10 @@ def ivf_probes(
         )
         .withColumn("ivf_list", F.element_at(F.expr(ids_sql), F.col("__pos") + 1))
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("__csim").desc(), F.col("ivf_list").asc())
-    return (
-        q.withColumn("__pr", F.row_number().over(w))
-        .filter(F.col("__pr") <= nprobe)
-        .select(query_id, query_vec, "ivf_list")
-    )
+    return top_k_per_group(
+        q, [query_id], [F.col("__csim").desc(), F.col("ivf_list").asc()], nprobe,
+        descending=None,
+    ).select(query_id, query_vec, "ivf_list")
 
 
 def ivf_topk(
@@ -379,12 +446,7 @@ def ivf_topk(
         )
         .select(F.col(query_id), F.col("neighbor_id"), F.round(sim, 6).alias("cosine"))
     )
-    w2 = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, query_id, F.col("cosine").desc(), k)
 
 
 def hyperplane_lsh_bucket(
@@ -522,14 +584,9 @@ def mips_lsh_topk(
         f"aggregate(zip_with(CAST({corpus_vec} AS ARRAY<DOUBLE>), "
         f"CAST({query_vec} AS ARRAY<DOUBLE>), (x, y) -> x * y), 0.0D, (a, v) -> a + v)"
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("inner_product").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.select(query_id, "neighbor_id", F.round(ip, 6).alias("inner_product"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "neighbor_id", "inner_product", "rank")
+    return _top_k(
+        cand.select(query_id, "neighbor_id", F.round(ip, 6).alias("inner_product")),
+        query_id, F.col("inner_product").desc(), k,
     )
 
 

@@ -828,26 +828,32 @@ def neardup_batch_applier(
     recomputes bands, which is exact at any scale and cheapest below
     ~10⁸ accepted docs.
     """
+    from spark_fuse_spark.cdc.store import ParquetStore
     from spark_fuse_spark.operators.dedup import incremental_minhash_pairs
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        import os
+    store = ParquetStore()
+    rejected_path = f"{corpus_path}__rejected"
 
-        rejected_path = f"{corpus_path}__rejected"
+    def publish(df: DataFrame, target: str) -> None:
+        # the first batch creates the table with its stored schema
+        if store.exists(df.sparkSession, target):
+            store.append(df, target)
+        else:
+            store.overwrite(df, target)
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
         batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
-        if os.path.exists(corpus_path):
-            corpus = spark.read.parquet(corpus_path)
+        if store.exists(spark, corpus_path):
+            corpus = store.read(spark, corpus_path)
             batch = batch.join(corpus.select(id_col), id_col, "left_anti")
         else:
             corpus = batch.limit(0)
-        if os.path.exists(rejected_path):
+        if store.exists(spark, rejected_path):
             batch = batch.join(
-                spark.read.parquet(rejected_path), id_col, "left_anti"
+                store.read(spark, rejected_path), id_col, "left_anti"
             )  # replayed rows already decided either way — drop
-        if batch.isEmpty():
+        if batch.isEmpty():  # also answers an empty micro-batch
             return
         both = corpus.withColumn("__new", F.lit(False)).unionByName(
             batch.withColumn("__new", F.lit(True))
@@ -892,10 +898,8 @@ def neardup_batch_applier(
             .partitionBy("batch_id")
             .parquet(pairs_path)
         )
-        rejected.select(F.col("__rid").alias(id_col)).write.mode(
-            "append"
-        ).parquet(rejected_path)
-        accepted.write.mode("append").parquet(corpus_path)
+        publish(rejected.select(F.col("__rid").alias(id_col)), rejected_path)
+        publish(accepted, corpus_path)
 
     return apply_batch
 

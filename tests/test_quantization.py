@@ -103,6 +103,29 @@ def test_encode_deterministic_and_reused(spark, emb, books):
     assert out.count() == 30
 
 
+@pytest.mark.parametrize("op", ["pq", "sq8", "ivfpq", "rp"])
+def test_full_rerank_equals_brute_force(spark, emb, books, op):
+    """With ``rerank`` equal to the corpus size every row is a candidate,
+    so the exact re-rank must return brute force's rows exactly: the
+    same neighbours, cosines, ranks and tie-breaks."""
+    from spark_fuse_spark.operators.quantization import ivfpq_topk, rp_topk, sq8_adc_topk
+    from spark_fuse_spark.operators.similarity import train_ivf_centroids
+
+    q = _queries(emb)
+    kw = dict(k=10, rerank=emb.count(), corpus_id="vec_id", corpus_vec="embedding")
+    if op == "pq":
+        got = pq_adc_topk(emb, q, books, **kw)
+    elif op == "sq8":
+        got = sq8_adc_topk(emb, q, dims=64, **kw)
+    elif op == "ivfpq":
+        cents = train_ivf_centroids(emb, k=8, vec_col="embedding", seed=42)
+        got = ivfpq_topk(emb, q, cents, books, nprobe=len(cents), **kw)
+    else:
+        got = rp_topk(emb, q, dims=64, m=32, **kw)
+    exact = brute_force_topk(emb, q, k=10, corpus_id="vec_id", corpus_vec="embedding")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exact.collect()))
+
+
 def test_indivisible_dims_raise(spark, emb):
     with pytest.raises(ValueError, match="not divisible"):
         train_pq_codebooks(emb, m=7, nbits=2, vec_col="embedding")
